@@ -9,13 +9,17 @@ Near-dup clusters have tiny diameters (near-duplicates of a document are
 near-duplicates of each other), so 3-5 rounds close real corpora. Each
 round is one shuffle of (node, label) pairs — linear, skew-safe — and
 frontier labels are localCheckpoint'ed to keep plans flat (same
-discipline as operators/traverse.py).
+discipline as operators/traverse.py). The stop test costs no job of its
+own: the number of labels that moved is observed by the round's
+checkpoint job (operators/fixpoint.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from loris_mri_spark.operators.fixpoint import checkpoint_count
 
 
 def connected_components(
@@ -50,7 +54,7 @@ def connected_components(
             .groupBy(F.col("a").alias("node2"))
             .agg(F.min("label").alias("nmin"))
         )
-        updated = (
+        updated, n_changed = checkpoint_count(
             labels.join(neighbor_min, labels["node"] == F.col("node2"), "left")
             .select(
                 "node",
@@ -60,12 +64,11 @@ def connected_components(
                 (F.coalesce(F.col("nmin"), F.col("label")) < F.col("label")).alias(
                     "__changed"
                 ),
-            )
-            .localCheckpoint()
+            ),
+            F.col("__changed"),
         )
-        changed = updated.filter(F.col("__changed")).isEmpty() is False
         labels = updated.drop("__changed")
-        if not changed:
+        if n_changed == 0:
             break
     else:
         # Cap exhausted while labels were still moving: the labels are NOT

@@ -11,14 +11,17 @@ each round joining the current frontier to the (narrow) edge table and
 anti-joining the visited set. Rounds = DAG depth (derivation chains are
 shallow: scan -> nifti -> qc-pic is depth ~3), so the loop runs O(depth)
 shuffles of frontier-sized data, never materializing the full closure
-matrix. The visited set is unioned incrementally; for very deep graphs
-checkpoint every few rounds to cut lineage growth.
+matrix. The visited set is unioned incrementally, and every round is
+localCheckpoint'ed so lineage stays flat; the round's row count (the stop
+test) comes from that same checkpoint job (operators/fixpoint.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from loris_mri_spark.operators.fixpoint import checkpoint_count
 
 
 def transitive_closure(
@@ -47,15 +50,20 @@ def transitive_closure(
 
     Scale safety is MECHANICAL, not contractual: ``visited`` grows
     monotonically with the closure, so each side's hint is applied only
-    while its exact row count (tracked from the per-round termination
-    count — no extra jobs beyond the seed count) stays at or below
+    while its exact row count (summed from the per-round counts, which
+    the checkpoint jobs observe — no job of their own) stays at or below
     ``broadcast_max_rows`` (default: conf
     ``spark.loris.closure.broadcastMaxRows``, 4M rows ≈ tens of MB of
     bigint keys). Past the threshold the hint is dropped and the planner
     falls back to a shuffle join for that side — slower, but never an
     8 GB-cap broadcast OOM if the seed contract ever drifts.
     """
-    e = edges.select(F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst"))
+    # Materialize the edge projection ONCE: every round scans it, and
+    # without this each round re-evaluates the caller's edge pipeline (for
+    # j9, a parquet decode and filter of all of lineitem per round).
+    e = edges.select(
+        F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
+    ).localCheckpoint()
     if broadcast_max_rows is None:
         broadcast_max_rows = int(
             edges.sparkSession.conf.get(
@@ -70,25 +78,23 @@ def transitive_closure(
     # stays a FLAT union of materialized frontiers instead of a plan that
     # re-derives every earlier round on each termination check (the
     # un-checkpointed loop went quadratic in plan size; a persist-only
-    # variant kept the whole chain pinned and OOM'd a 1g driver).
-    frontier = seeds.select(F.col(id_col).alias("__id")).distinct().localCheckpoint()
-    n_frontier = frontier.count()
+    # variant kept the whole chain pinned and OOM'd a 1g driver). The
+    # count observed by that checkpoint job is both the stop test and the
+    # broadcast-size ledger for the next round.
+    frontier, n_frontier = checkpoint_count(
+        seeds.select(F.col(id_col).alias("__id")).distinct()
+    )
     visited = frontier
     n_visited = n_frontier
 
     for _ in range(max_iterations):
         f = hinted(frontier, n_frontier)
-        nxt = (
+        nxt, n_new = checkpoint_count(
             f.join(e, f["__id"] == e["__src"])
             .select(F.col("__dst").alias("__id"))
             .distinct()
             .join(hinted(visited, n_visited), on="__id", how="left_anti")
-            .localCheckpoint()
         )
-        # count replaces the old isEmpty probe 1:1 (same one cheap job
-        # over the just-checkpointed partitions) and doubles as the
-        # broadcast-size ledger for the next round.
-        n_new = nxt.count()
         if n_new == 0:
             break
         visited = visited.unionByName(nxt)
@@ -142,7 +148,7 @@ def ancestor_closure(
     out = edges.withColumn("dist", F.lit(1)).localCheckpoint()
     frontier = out
     for _ in range(max_iterations):
-        nxt = (
+        nxt, n_new = checkpoint_count(
             frontier.alias("f")
             .join(edges.alias("e"), F.col("f.__a") == F.col("e.__n"))
             .select(
@@ -150,9 +156,8 @@ def ancestor_closure(
                 F.col("e.__a").alias("__a"),
                 (F.col("f.dist") + 1).alias("dist"),
             )
-            .localCheckpoint()
         )
-        if nxt.isEmpty():
+        if n_new == 0:
             break
         out = out.unionByName(nxt)
         frontier = nxt

@@ -32,3 +32,42 @@ def test_observation_metrics_match_aggregation(spark, sf_dir):
     assert got["qty"] == direct["qty"]
     assert got["n_disc"] == direct["n_disc"]
     assert 0 < n_out < got["n_rows"]
+
+
+
+def _checkpoint_observed(df):
+    """Attach a row-count Observation, checkpoint eagerly, then read the
+    count: the shape operators/fixpoint.checkpoint_count relies on. No
+    action runs between the checkpoint and the read, so the metrics must
+    come from the checkpoint job; a read that would block fails on the
+    timeout instead of hanging the suite."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    checkpointed = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    with ThreadPoolExecutor(1) as pool:
+        n = pool.submit(lambda: obs.get["n"]).result(timeout=60)
+    return checkpointed, n
+
+
+def _round_plan(spark, keep):
+    """A transitive_closure round's shape: a broadcast join, then a
+    distinct."""
+    from pyspark.sql import functions as F
+
+    a = spark.range(100).filter(keep).select(F.col("id").alias("k"))
+    b = spark.range(50).select((F.col("id") % 7).alias("k"))
+    return a.join(F.broadcast(b), "k").select("k").distinct()
+
+
+def test_observation_fires_on_eager_local_checkpoint(spark):
+    checkpointed, n = _checkpoint_observed(_round_plan(spark, "id >= 0"))
+    assert n == checkpointed.count() == 7
+
+
+def test_observation_on_empty_checkpoint_is_zero_without_blocking(spark):
+    checkpointed, n = _checkpoint_observed(_round_plan(spark, "id > 1000"))
+    assert n == checkpointed.count() == 0

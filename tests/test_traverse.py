@@ -43,6 +43,42 @@ def test_transitive_closure_reaches_and_stops(spark):
     assert got == {1, 2, 3}
 
 
+def test_transitive_closure_job_count(spark):
+    """Job-count pin for a 3-deep chain: the edge-list checkpoint, the seed
+    round and four frontier rounds (the last one drains). Each round is
+    one eager checkpoint whose observed count is the stop test, with no
+    count job of its own. Job counts are deterministic, so an extra
+    per-round job fails here without timing noise."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
+    )
+    seeds = spark.createDataFrame([(1,)], "id long")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    closure = transitive_closure(edges, seeds)
+    jobs = scheduler.nextJobId() - before
+    assert {r["id"] for r in closure.collect()} == {1, 2, 3, 4}
+    assert jobs == 17
+
+
+def test_transitive_closure_cyclic_graph_drains(spark):
+    """1 -> 2 -> 3 -> 1 plus a branch 2 -> 5 -> 6: the anti-join against
+    the visited set stops the cycle, so the loop drains instead of
+    hitting the cap."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (2, 5), (5, 6), (7, 8)], "src int, dst int"
+    )
+    seeds = spark.createDataFrame([(1,)], "id int")
+    got = sorted(r["id"] for r in transitive_closure(edges, seeds).collect())
+    assert got == [1, 2, 3, 5, 6]
+
+
+def test_transitive_closure_empty_seeds(spark):
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src int, dst int")
+    seeds = spark.createDataFrame([], "id int")
+    assert transitive_closure(edges, seeds).collect() == []
+
+
 def test_transitive_closure_broadcast_guard_fallback(spark):
     """Above ``broadcast_max_rows`` the frontier/visited broadcast hints
     are DROPPED (shuffle-join fallback) instead of trusting the
