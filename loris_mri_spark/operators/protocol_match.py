@@ -16,23 +16,29 @@ Semantics re-expressed Spark-first:
   INDEPENDENTLY PER SCAN ROW (the reference matches one file at a time).
 
 Physical strategy (``identify_protocol``, the default): the rule table is
-O(10..1000) rows even in production — small enough to inline as an
-``array<struct>`` literal in the plan itself. Matching is then
-``filter(rules, r -> cond(r, row))`` + ``array_min`` over a
-priority-encoded struct: **zero shuffle, zero extra scan, one codegen'd
-pass over the scan table**. At 100 TB this is embarrassingly parallel —
-each task matches its partition's rows with no exchange at all. (Round-1
-used a broadcast join + window + re-join, which scanned the big table twice
-and shuffled it once; that form is kept below as
-``identify_protocol_windowed`` for rule tables too large to inline.)
+O(10..1000) rows even in production — small enough to compile into the
+plan itself. The driver sorts the rules into priority order and builds one
+``CASE WHEN`` chain, one branch per rule with the rule's values as typed
+literals, so the first true branch is the first match: **zero shuffle,
+zero extra scan, one pass over the scan table inside whole-stage
+codegen**. Building the chain costs O(rules) expression construction on
+the driver and no Spark job. At 100 TB this is embarrassingly parallel —
+each task matches its partition's rows with no exchange at all. (An
+earlier form matched with ``filter`` + ``transform`` + ``array_min`` over
+an inlined ``array<struct>``; Spark evaluates those higher-order functions
+interpreted, outside codegen. Round-1 used a broadcast join + window +
+re-join, which scanned the big table twice and shuffled it once; that form
+is kept below as ``identify_protocol_windowed`` for rule tables too large
+to inline.)
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
-from typing import Sequence
+from typing import Any, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -71,20 +77,20 @@ class RegexSpec:
 @dataclass(frozen=True)
 class PrioritySpec:
     """One priority key for first-match ordering. ``ascending=False`` is
-    supported for numeric columns only (encoded as negation so the match
-    list can be reduced with ``array_min``)."""
+    supported for numeric columns only (encoded as negation, so a NULL key
+    sorts first in either direction)."""
 
     col: str
     ascending: bool = True
 
 
 def _rule_condition(
-    rule: Column,
+    rule: Mapping[str, Column],
     ranges: Sequence[RangeSpec],
     exacts: Sequence[ExactSpec],
     regexes: Sequence[RegexSpec],
 ) -> Column:
-    """Match condition between one rule struct and the current scan row."""
+    """Match condition between one rule's values and the current scan row."""
     cond = F.lit(True)
     for spec in exacts:
         cond = cond & wildcard_eq(rule[spec.rule_col], F.col(spec.value_col))
@@ -95,6 +101,36 @@ def _rule_condition(
             F.col(spec.value_col), rule[spec.min_col], rule[spec.max_col]
         )
     return cond
+
+
+def _ascending(v: Any) -> tuple:
+    """Spark's ascending order for one struct field: NULL first, NaN last."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and math.isnan(v):
+        return (2,)
+    return (1, v)
+
+
+def _priority_order(
+    rule_rows: list[Row],
+    priority: Sequence[PrioritySpec],
+    rule_output_cols: Sequence[str],
+) -> list[Row]:
+    """The rules in first-match order: ascending on the priority keys (a
+    descending key negated, so a NULL there still sorts first), then on the
+    output columns, so that full ties resolve as a struct comparison of
+    ``(keys..., outputs...)`` would."""
+
+    def key(row: Row) -> tuple:
+        keys = []
+        for p in priority:
+            v = row[p.col]
+            keys.append(_ascending(v if p.ascending or v is None else -v))
+        keys.extend(_ascending(row[c]) for c in rule_output_cols)
+        return tuple(keys)
+
+    return sorted(rule_rows, key=key)
 
 
 def identify_protocol(
@@ -113,37 +149,37 @@ def identify_protocol(
     = ``unmatched_label`` (the caller routes those to the violation sink, as
     `imaging.py:235-301` does).
 
-    The rule table is collected to the driver and inlined as a literal
-    ``array<struct>`` — the same small-side contract as a broadcast join,
-    made explicit. Matching + first-match selection run entirely inside
-    whole-stage codegen with NO shuffle and ONE scan of ``scans``.
+    The rule table is collected to the driver (the same small-side contract
+    as a broadcast join, made explicit), sorted into priority order and
+    compiled into one ``CASE WHEN cond_1 THEN outputs_1 WHEN cond_2 ...``
+    chain whose rule values are typed literals: the first true branch is
+    the first match. Catalyst folds the wildcard branches away and each
+    regex becomes a literal pattern compiled once, and the chain runs
+    inside the scan's whole-stage codegen with NO shuffle and ONE scan of
+    ``scans``. Building it is O(rules) expression construction on the
+    driver. (The earlier ``filter``/``array_min`` form over an inlined
+    ``array<struct>`` ran interpreted, through higher-order functions'
+    ``CodegenFallback``.)
 
     Returns all ``scans`` columns + ``rule_output_cols``.
     """
     rule_rows = rules.collect()  # small-side contract: O(10..1000) rules
-    schema = rules.schema
-    rules_arr = F.array(
-        *[
-            F.struct(
-                *[
-                    F.lit(row[f.name]).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ]
-            )
-            for row in rule_rows
+    types = {f.name: f.dataType for f in rules.schema.fields}
+    used = dict.fromkeys(
+        [
+            *(s.rule_col for s in exacts),
+            *(s.pattern_col for s in regexes),
+            *(c for s in ranges for c in (s.min_col, s.max_col)),
+            *rule_output_cols,
         ]
     )
 
-    def sort_key(rule: Column) -> Column:
-        keys = []
-        for i, p in enumerate(priority):
-            k = rule[p.col] if p.ascending else -rule[p.col]
-            keys.append(k.alias(f"__k{i}"))
-        payload = [rule[c].alias(c) for c in rule_output_cols]
-        return F.struct(*keys, *payload)
-
-    matched = F.filter(rules_arr, lambda r: _rule_condition(r, ranges, exacts, regexes))
-    best = F.array_min(F.transform(matched, sort_key))
+    best = None
+    for row in _priority_order(rule_rows, priority, rule_output_cols):
+        rule = {c: F.lit(row[c]).cast(types[c]) for c in used}
+        cond = _rule_condition(rule, ranges, exacts, regexes)
+        outputs = F.struct(*[rule[c].alias(c) for c in rule_output_cols])
+        best = F.when(cond, outputs) if best is None else best.when(cond, outputs)
 
     out = scans.withColumn("__match", best).select(
         *scans.columns,

@@ -9,6 +9,8 @@ stay correct.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from loris_mri_spark import workload
@@ -82,12 +84,37 @@ def test_predicate_pushdown_reaches_scan(spark, sf_dir):
     assert "GreaterThanOrEqual(o_orderkey,1000" in plan.replace(" ", "")
 
 
-def test_j7_single_scan_no_shuffle(spark, sf_dir):
+def test_j7_single_scan_no_shuffle(spark, sf_dir, monkeypatch):
+    """One scan, no exchange, and the rule match compiled into the scan's
+    whole-stage codegen (no interpreted higher-order functions). Building
+    the match fires no Spark job: the rule table is a local relation."""
+    from loris_mri_spark.workload import rules
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    identify_protocol = rules.identify_protocol
+    match_jobs = []
+
+    def counted(*args, **kwargs):
+        before = scheduler.nextJobId()
+        out = identify_protocol(*args, **kwargs)
+        match_jobs.append(scheduler.nextJobId() - before)
+        return out
+
+    monkeypatch.setattr(rules, "identify_protocol", counted)
     df = workload.QUERIES["j7_protocol_identification"](spark, sf_dir)
+    assert match_jobs == [0]
+
     plan = _plan(df)
     assert plan.count("Scan parquet") == 1
     assert "Exchange" not in plan
     assert "Join" not in plan
+    assert "lambdafunction" not in plan
+    projects = [
+        line for line in _formatted(df).splitlines()
+        if re.match(r"\(\d+\) Project", line)
+    ]
+    assert projects
+    assert all("codegen id" in line for line in projects), projects
 
 
 def test_j1_broadcasts_dimension(spark, sf_dir):
