@@ -1,9 +1,21 @@
 """File-format sources (SURVEY §2.1) — every reader is a DataFrame source:
-`spark.read.format("binaryFile")` (or csv/json for sidecars) feeding
+a binaryFile scan (`files.binary_files`; csv/json for sidecars) feeding
 Arrow-batched `mapInPandas` parsers. The parse code is pure stdlib
 (struct/tarfile/gzip): NIfTI-1 headers and explicit-VR DICOM are fixed
 public binary layouts, so no imaging library is required for the header
 surface the reference reads.
+
+Task packing: each binaryFile scan runs in ``max(defaultParallelism,
+ceil(listed_bytes / spark.sql.files.maxPartitionBytes))`` tasks, i.e.
+one per slot for a small listing and one per 128 MB of file bytes at
+scale. Spark alone would charge every file a 4 MB open cost and so split
+192 small DICOMs into 6 tasks. A Python task has a fixed floor before
+the parser runs: about 0.28 s per task for an identity `mapInPandas` on
+`local[2]` (4-vCPU host, Python 3.11, PySpark 4.1), mostly
+`importlib.invalidate_caches()` in the worker's per-task set-up
+re-reading the directory of `pyspark.zip`. Parsing is cheap next to it
+(192 small DICOMs parse in ~4 ms in one process), so the task count, not
+the bytes, sets a small scan's cost.
 """
 
 from loris_mri_spark.sources.archive import read_tar_members

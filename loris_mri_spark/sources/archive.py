@@ -20,6 +20,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from loris_mri_spark.sources.files import binary_files
+
 MEMBER_SCHEMA = (
     "archive string, member string, size long, content binary"
 )
@@ -73,10 +75,5 @@ def read_tar_members(spark: SparkSession, path_glob: str) -> DataFrame:
     """Explode every member of every tar/tar.gz under ``path_glob`` into
     (archive, member, size, content) rows — a row-generating (UDTF-like)
     source; compose with the DICOM/NIfTI parsers for nested ingest."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob).select("path", "content")
     return files.mapInPandas(_explode_partition, schema=MEMBER_SCHEMA)

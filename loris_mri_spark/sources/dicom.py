@@ -5,12 +5,13 @@ other (`/root/reference/python/loris_dicom_importer/src/loris_dicom_importer/sum
 Perl `dicom-archive/DICOM/DCMSUM.pm:722-736`), with a nested-tag fallback
 lookup for enhanced DICOM (`summary_get.py:160-173`).
 
-Spark-first shape: `spark.read.format("binaryFile")` lists and reads the
-files distributively (one task per file split), and an Arrow-batched
-`mapInPandas` runs the header parse per partition — the per-file Perl/
-pydicom loop becomes one scan stage. At 100 TB of DICOMs the parallelism
-is per-file and the output is a narrow header table; the pixel payload
-never leaves the scan (we slice headers only).
+Spark-first shape: a binaryFile scan (`files.binary_files`) lists and
+reads the files distributively, packed into one task per slot for a
+small listing and one per 128 MB (`spark.sql.files.maxPartitionBytes`)
+of file bytes at scale, and an Arrow-batched `mapInPandas` runs the
+header parse per partition — the per-file Perl/pydicom loop becomes one
+scan stage. At 100 TB of DICOMs the output is a narrow header table; the
+pixel payload never leaves the scan (we slice headers only).
 
 The parser reads explicit-VR little-endian DICOM (preamble + 'DICM' +
 (group,element,VR,len,value) stream), implicit-VR little-endian
@@ -35,6 +36,8 @@ from typing import Any, Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from loris_mri_spark.sources.files import binary_files
 
 # Tags the reference's summary extracts (summary_get.py:21-63).
 _TAGS = {
@@ -339,12 +342,7 @@ def _parse_with_pydicom(content: bytes) -> dict[str, Any]:
 def scan_dicom_dir(spark: SparkSession, path: str) -> DataFrame:
     """S1: distributed DICOM directory scan -> header table. One binaryFile
     scan, one mapInPandas parse; pixel data stays inside the scan tasks."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path).select("path", "content")
     return files.mapInPandas(_parse_partition, schema=DICOM_SCHEMA)
 
 

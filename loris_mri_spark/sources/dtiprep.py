@@ -28,6 +28,8 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from loris_mri_spark.sources.files import binary_files
+
 DTIPREP_SCHEMA = (
     "path string, root_tag string, entry_path string, parameter string, "
     "depth int, value_index int, value string, processing string, "
@@ -150,11 +152,5 @@ def read_dtiprep_xml(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed DTIPrep XML scan: binaryFile listing parallelizes over
     files; parsing is Arrow-batched per partition. At 100 TB the unit of
     work is one (small) XML file — partitioning by file is exactly right."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.xml").select("path", "content")
     return files.mapInPandas(_parse_partition, schema=DTIPREP_SCHEMA)

@@ -30,6 +30,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from loris_mri_spark.sources.files import binary_files
+
 EDF_CHANNEL_SCHEMA = (
     "path string, channel_idx int, label string, phys_dim string, "
     "n_records int, samples_per_record int, n_samples long, "
@@ -123,13 +125,7 @@ def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def read_edf_channels(spark: SparkSession, path_glob: str) -> DataFrame:
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.edf")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.edf").select("path", "content")
     return files.mapInPandas(_parse_partition, schema=EDF_CHANNEL_SCHEMA)
 
 
@@ -313,13 +309,7 @@ def parse_ctf_res4_bytes(content: bytes) -> dict[str, Any] | None:
 
 
 def read_ctf_headers(spark: SparkSession, path_glob: str) -> DataFrame:
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.res4")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.res4").select("path", "content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in CTF_SCHEMA.split(", ")]
@@ -403,10 +393,7 @@ def read_ctf_channels(spark: SparkSession, path_glob: str) -> DataFrame:
         )
     )
     meg4 = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.meg4")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
+        binary_files(spark, path_glob, "*.meg4")
         .select(
             "path",
             F.regexp_replace("path", "/[^/]+$", "").alias("ds_dir"),
@@ -436,13 +423,7 @@ def read_ctf_channels(spark: SparkSession, path_glob: str) -> DataFrame:
 
 
 def read_eeglab_channels(spark: SparkSession, path_glob: str) -> DataFrame:
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.set")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.set").select("path", "content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in EEGLAB_CHANNEL_SCHEMA.split(", ")]
@@ -597,18 +578,9 @@ def read_brainvision_channels(spark: SparkSession, path_glob: str) -> DataFrame:
     DataFile NEXT TO IT (the .ds-style sibling contract) for per-channel
     sample stats — one binaryFile scan per extension, joined on dirname +
     DataFile, parse in Arrow-batched tasks."""
-    vhdr = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.vhdr")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    vhdr = binary_files(spark, path_glob, "*.vhdr").select("path", "content")
     eeg = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.eeg")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
+        binary_files(spark, path_glob, "*.eeg")
         .selectExpr("path AS eeg_path", "content AS eeg_content")
     )
     import pyspark.sql.functions as F
@@ -674,13 +646,7 @@ def read_brainvision_channels(spark: SparkSession, path_glob: str) -> DataFrame:
 
 
 def read_brainvision_markers(spark: SparkSession, path_glob: str) -> DataFrame:
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.vmrk")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.vmrk").select("path", "content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in BRAINVISION_MARKER_SCHEMA.split(", ")]
@@ -769,13 +735,7 @@ def parse_edf_annotations(content: bytes) -> list[dict[str, Any]]:
 
 
 def read_edf_annotations(spark: SparkSession, path_glob: str) -> DataFrame:
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.edf")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.edf").select("path", "content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in EDF_ANNOTATION_SCHEMA.split(", ")]

@@ -15,9 +15,10 @@ per-matrix subheaders. The reference parses the same surface out of
 system_type, patient_name, facility_name, ...), proving the field set;
 here the bytes are decoded directly.
 
-Spark-first shape: binaryFile scan -> Arrow-batched mapInPandas, one task
-per file batch, no temp files, no subprocess — embarrassingly parallel at
-100 TB. Files that fail to parse become classification rows
+Spark-first shape: binaryFile scan (`files.binary_files`: one task per
+slot for a small listing, one per 128 MB of file bytes at scale) ->
+Arrow-batched mapInPandas, no temp files, no subprocess — embarrassingly
+parallel at 100 TB. Files that fail to parse become classification rows
 (``is_readable = false``), never job failures (the QC violation-row
 discipline).
 """
@@ -31,6 +32,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from loris_mri_spark.sources.files import binary_files
 
 # --------------------------------------------------------------------------
 # MINC1 / NetCDF-classic header parser
@@ -344,13 +347,7 @@ def read_minc_headers(spark: SparkSession, path_glob: str) -> DataFrame:
     (variable, attribute). MINC1 (NetCDF classic) and MINC2 (HDF5) both
     parse natively; anything else classifies as ``is_readable=false``
     instead of failing the scan."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mnc")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.mnc").select("path", "content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in MINC_SCHEMA.split(", ")]
@@ -479,13 +476,7 @@ def parse_ecat7_directory(content: bytes) -> list[dict[str, Any]]:
 
 def read_ecat_headers(spark: SparkSession, path_glob: str) -> DataFrame:
     """S6: ECAT7 main headers, one row per .v file."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.v")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.v").select("path", "content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in ECAT_SCHEMA.split(", ")]
@@ -509,13 +500,7 @@ def read_ecat_headers(spark: SparkSession, path_glob: str) -> DataFrame:
 def read_ecat_matrices(spark: SparkSession, path_glob: str) -> DataFrame:
     """S6: directory + subheader explosion, one row per stored matrix
     (frame/gate/bed) — the per-frame surface ecat2minc conversion walks."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.v")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.v").select("path", "content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in ECAT_MATRIX_SCHEMA.split(", ")]
@@ -573,13 +558,7 @@ def parse_matlab_sidecar(content: bytes) -> list[dict[str, Any]]:
 def read_ecat_sidecars(spark: SparkSession, path_glob: str) -> DataFrame:
     """S6: Matlab sidecar scan alongside the .v files — one row per
     (file, key) study parameter."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.m")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.m").select("path", "content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [c.split(" ")[0] for c in MATLAB_SIDECAR_SCHEMA.split(", ")]

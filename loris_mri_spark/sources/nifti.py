@@ -24,6 +24,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from loris_mri_spark.sources.files import binary_files
+
 NIFTI_SCHEMA = (
     "path string, is_nifti boolean, ndim int, xspace int, yspace int, "
     "zspace int, time int, xstep double, ystep double, zstep double, "
@@ -77,13 +79,7 @@ def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def read_nifti_headers(spark: SparkSession, path_glob: str) -> DataFrame:
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.nii*")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.nii*").select("path", "content")
     return files.mapInPandas(_parse_partition, schema=NIFTI_SCHEMA)
 
 
@@ -240,13 +236,7 @@ def read_nifti_voxel_stats(spark: SparkSession, path_glob: str) -> DataFrame:
                 out[c] = out[c].astype("Int64")
             yield out
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.nii*")
-        .option("recursiveFileLookup", "true")
-        .load(path_glob)
-        .select("path", "content")
-    )
+    files = binary_files(spark, path_glob, "*.nii*").select("path", "content")
     return files.mapInPandas(run, schema=VOXEL_STATS_SCHEMA)
 
 
@@ -356,8 +346,7 @@ def read_nifti_cog(spark: SparkSession, path_glob: str) -> DataFrame:
             yield out
 
     files = (
-        spark.read.format("binaryFile")
-        .load(path_glob)
+        binary_files(spark, path_glob, recursive=False)
         .select("path", "content")
     )
     return files.mapInPandas(run, schema=COG_SCHEMA)

@@ -1590,7 +1590,8 @@ def pipeline_hrrt_insertion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-GB ECAT volume is never resident in a task (the old shape
     # pulled whole-file bytes through the JVM -> Arrow -> pandas_udf
     # boundary, the last whole-file Python hop in the repo). Same bytes,
-    # same digest; only the transport changed.
+    # same digest; only the transport changed. The listed ECAT files are
+    # assumed immutable until hashed: one that vanished hashes to NULL.
     archive_files = ecat_files.select("file", "path").mapInPandas(
         _blake2b_stream_partition, schema="file string, b2b string"
     ).select(
@@ -2018,16 +2019,24 @@ def _blake2b_stream_partition(batches):
     of the file at ``path`` computed by CHUNKED reads (8 MiB), so task
     memory is one buffer even for a multi-GB recording. The inventory
     scan itself is pruned to metadata (no ``content`` column ever
-    crosses Arrow)."""
+    crosses Arrow). Callers assume the listed files are immutable until
+    hashed. The binaryFile scan stats each file when its task reads it
+    and fails on a missing one, but a whole Arrow batch is scanned before
+    it is hashed: a file that vanishes in that window keeps its row with
+    a NULL ``b2b`` instead of failing the task."""
     import hashlib
 
     for pdf in batches:
         digs = []
         for p in pdf["path"]:
             h = hashlib.blake2b(digest_size=32)
-            for blk in _iter_file_chunks(p):
-                h.update(blk)
-            digs.append(h.hexdigest())
+            try:
+                for blk in _iter_file_chunks(p):
+                    h.update(blk)
+            except FileNotFoundError:
+                digs.append(None)
+            else:
+                digs.append(h.hexdigest())
         yield pdf.assign(b2b=digs).drop(columns=["path"])
 
 
@@ -2408,7 +2417,9 @@ def pipeline_eeg_bids_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # chunked streaming hash (no join): one mapInPandas pass carries
     # fname/sub/ext through and appends b2b from 8 MiB chunked reads of
-    # path — a multi-GB CTF/.meg4 recording is never resident in a task
+    # path — a multi-GB CTF/.meg4 recording is never resident in a task.
+    # The listed recordings are assumed immutable until hashed: one that
+    # vanished in between hashes to NULL.
     ins_hashed = ins.select("fname", "sub", "ext", "path").mapInPandas(
         _blake2b_stream_partition,
         schema="fname string, sub string, ext string, b2b string",
@@ -3039,7 +3050,10 @@ def pipeline_mri_bids_import(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    # duplicate gate: chunked hash, then path-order keep-first per hash
+    # duplicate gate: chunked hash, then path-order keep-first per hash.
+    # The listed volumes are assumed immutable until hashed: one that
+    # vanished in between hashes to NULL and is classified file_not_found
+    # (never a duplicate of another vanished file).
     gated = inv.filter(F.col("early").isNull())
     hashed = gated.select(
         "fname", "sub", "data_type", "suffix", "base", "prefix", "relp",
@@ -3054,7 +3068,8 @@ def pipeline_mri_bids_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_w = Window.partitionBy("b2b").orderBy("relp")
     hashed = hashed.withColumn(
         "status",
-        F.when(F.row_number().over(dup_w) > 1, "duplicate_hash")
+        F.when(F.col("b2b").isNull(), "file_not_found")
+        .when(F.row_number().over(dup_w) > 1, "duplicate_hash")
         .otherwise("inserted"),
     )
     # --- aux + scans file hashes (one metadata scan, chunked hash) ------
@@ -3094,6 +3109,7 @@ def pipeline_mri_bids_import(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+    # (listed aux files are assumed immutable until hashed, as above)
     aux_hashed = aux.select("kind", "key", "aux_fname", "path").mapInPandas(
         _blake2b_stream_partition,
         schema="kind string, key string, aux_fname string, b2b string",

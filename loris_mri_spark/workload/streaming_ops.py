@@ -4,7 +4,9 @@ which must equal the batch answer, so each has a full DuckDB oracle."""
 
 from __future__ import annotations
 
+import atexit
 import os
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -937,8 +939,21 @@ def t16_compact_stores(spark: SparkSession, store: str) -> int:
 
 
 # reused across micro-batches (and t16 runs) — see the submit site in
-# _t16_detect_batch for why; 3 = the batch's three independent sinks
-_T16_POOL = ThreadPoolExecutor(max_workers=3, thread_name_prefix="t16-sink")
+# _t16_detect_batch for why; 3 = the batch's three independent sinks.
+# Created on first use, shut down at interpreter exit.
+_T16_POOL: ThreadPoolExecutor | None = None
+_T16_POOL_LOCK = threading.Lock()
+
+
+def _t16_pool() -> ThreadPoolExecutor:
+    global _T16_POOL
+    with _T16_POOL_LOCK:
+        if _T16_POOL is None:
+            _T16_POOL = ThreadPoolExecutor(
+                max_workers=3, thread_name_prefix="t16-sink"
+            )
+            atexit.register(_T16_POOL.shutdown, cancel_futures=True)
+        return _T16_POOL
 
 
 def _t16_detect_batch(
@@ -1047,16 +1062,17 @@ def _t16_detect_batch(
     # (pinned-thread mode gives plain pool threads FRESH properties).
     from loris_mri_spark.session import inheritable
 
+    pool = _t16_pool()
     for f in [
-        _T16_POOL.submit(
+        pool.submit(
             inheritable(pairs.write.mode("overwrite").parquet, bspark),
             f"{pair_sink}/bid={bid}",
         ),
-        _T16_POOL.submit(
+        pool.submit(
             inheritable(bands.write.mode("overwrite").parquet, bspark),
             f"{band_store}/bid={bid}",
         ),
-        _T16_POOL.submit(
+        pool.submit(
             inheritable(docs.write.mode("overwrite").parquet, bspark),
             f"{sh_store}/bid={bid}",
         ),

@@ -78,3 +78,34 @@ def test_bids_dataset_dispatch_rows_pinned():
         "sub-05/anat",
     ]
     assert all(m == v for _, _, _, v, m in rows)
+
+
+def test_blake2b_hash_of_a_vanished_file_is_null(spark, tmp_path):
+    """A file deleted after it was listed (the listing materialized, as
+    a scanned Arrow batch is before it is hashed) keeps its row with a
+    NULL hash; the task does not fail."""
+    import hashlib
+
+    from loris_mri_spark.workload.pipeline import _blake2b_stream_partition
+
+    for name in ("a.nii", "b.nii", "c.nii"):
+        (tmp_path / name).write_bytes(name.encode() * 1000)
+    listed = (
+        spark.read.format("binaryFile")
+        .load(str(tmp_path))
+        .select("path", "path")
+        .toDF("name", "path")
+        .localCheckpoint()
+    )
+    (tmp_path / "b.nii").unlink()
+    got = {
+        r["name"].rsplit("/", 1)[-1]: r["b2b"]
+        for r in listed.mapInPandas(
+            _blake2b_stream_partition, schema="name string, b2b string"
+        ).collect()
+    }
+    assert got == {
+        "a.nii": hashlib.blake2b(b"a.nii" * 1000, digest_size=32).hexdigest(),
+        "b.nii": None,
+        "c.nii": hashlib.blake2b(b"c.nii" * 1000, digest_size=32).hexdigest(),
+    }

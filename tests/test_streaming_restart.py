@@ -131,3 +131,24 @@ def test_t16_size_prefilter_is_lossless(spark, sf_dir):
     want = {(r["i"], r["j"]) for r in brute.collect()}
     assert want, "expected non-empty ground-truth pairs"
     assert got == want
+
+
+def test_t16_pool_created_once_and_shut_down_at_exit(monkeypatch):
+    """The t16 sink pool is built on first use, reused after, and its
+    shutdown is registered with atexit exactly once."""
+    import atexit
+
+    from loris_mri_spark.workload import streaming_ops
+
+    registered = []
+    monkeypatch.setattr(streaming_ops, "_T16_POOL", None)
+    monkeypatch.setattr(
+        atexit, "register", lambda fn, *a, **kw: registered.append(fn)
+    )
+    pool = streaming_ops._t16_pool()
+    try:
+        assert streaming_ops._t16_pool() is pool
+        assert pool.submit(lambda: 7).result() == 7
+        assert registered == [pool.shutdown]
+    finally:
+        pool.shutdown()
