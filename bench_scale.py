@@ -68,8 +68,9 @@ SCALE_QUERIES = [
     "mm_decode_features",
     "mm_frame_sample",
     "pipeline_non_minc_insertion",
-    # registered late-r10 (R11_QUEUE): measured at registration time so
-    # the growth curve exists before their first driver row
+    # registered late-r10, first driver-checked in r11: measured at
+    # registration time so the growth curve exists before their first
+    # driver row
     "ann_sq8_recall",
     "corpus_ngram_novelty",
     # new in r11 (each also probed at registration: BENCH_SF1.json keys

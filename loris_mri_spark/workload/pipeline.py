@@ -289,26 +289,12 @@ def pipeline_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiles = ev.groupBy("user_id").agg(
         F.count("*").alias("n_events")
     )
-    # no .distinct() by default: the anti-join only tests MEMBERSHIP of
-    # the key, so duplicate roster rows cannot change which rows are
-    # kept, and the broadcast hash relation dedupes keys as it builds —
-    # dropping the distinct removes one aggregate exchange from every
-    # roster evaluation (it is evaluated once per store rewrite).
-    # SCALE TRADEOFF (r13 ADVICE): without the distinct the broadcast
-    # COLLECTS one driver-side row per matching event (~|events|/37),
-    # not per distinct user — the HashedRelation dedupes only after the
-    # full duplicate row set crosses the driver. At corpus scale set
-    # spark.loris.gdpr.rosterDedup=true: the partial-agg distinct
-    # shrinks the collect to |users|/37 for one extra narrow exchange
-    # (bench-local default false keeps the measured one-exchange plan).
-    roster = ev.select("user_id").filter(F.col("user_id") % 37 == 0)
-    if (
-        str(
-            spark.conf.get("spark.loris.gdpr.rosterDedup", "false")
-        ).lower()
-        == "true"
-    ):
-        roster = roster.distinct()
+    # the distinct bounds the broadcast's driver-side collect to one row
+    # per erased user, not one per matching event (~|events|/37); the
+    # anti-join tests key membership only, so it changes no kept row
+    roster = (
+        ev.select("user_id").filter(F.col("user_id") % 37 == 0).distinct()
+    )
 
     def erase(store_name: str, df: DataFrame, key: str):
         store = scratch_dir(f"gdpr-{store_name}")

@@ -1283,9 +1283,9 @@ def ann_mrr_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Two-level (IMI-style) quantizer queries — registered late-r8, enter the
-# driver window in r9 (workload.R9_QUEUE). Fixed hyper-parameters shared by
-# the engine queries and their import-time golden replays.
+# Two-level (IMI-style) quantizer queries — registered late-r8, first
+# driver-checked in r9. Fixed hyper-parameters shared by the engine
+# queries and their import-time golden replays.
 _TL_KC, _TL_KF, _TL_ITER = 3, 3, 2
 
 

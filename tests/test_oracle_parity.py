@@ -3,12 +3,18 @@ tables — the local mirror of the driver's CORRECTNESS gate."""
 
 from __future__ import annotations
 
+import json
+import re
+from pathlib import Path
+
 import pytest
 
 from loris_mri_spark import workload
 from tests.oracle import assert_parity
 
 workload.load_all()
+
+REPO = Path(__file__).resolve().parent.parent
 
 _WITH_ORACLE = sorted(n for n in workload.QUERIES if n in workload.ORACLES)
 _ROWS_ONLY = sorted(n for n in workload.QUERIES if n not in workload.ORACLES)
@@ -27,48 +33,115 @@ def test_rows_only_query_runs(spark, sf_dir, name):
     assert len(df.schema.fields) > 0
 
 
-def test_r14_correctness_window_layout():
-    """The external driver hash-checks only the FIRST 50 registry entries.
-    Pin the declared r14 window (the 12 r13-optimization-touched queries
-    with changed, never-driver-checked trees leading + the R14_QUEUE
-    first-check + the displaced R14_TOPUP_FIRST + this round's
-    code-changed re-greens + oldest-green rotation) as exactly those
-    50 — a late registration must not silently displace a promised
-    query. Also pin the hygiene invariants the r7 ADVICE asked for: the
-    window and the full priority order are duplicate-free, and every
-    priority entry is registered. The window leads with the r13 VERDICT
-    what's-wrong item 2 list — r13 VERDICT item 3."""
-    first50 = list(workload.QUERIES)[:50]
-    assert len(workload.R14_WINDOW) == 50
-    assert first50 == workload.R14_WINDOW, [
-        (a, b) for a, b in zip(first50, workload.R14_WINDOW) if a != b
+def _check(green: bool) -> dict:
+    return {
+        "rows_match": True,
+        "schema_match": True,
+        "hash_match": green,
+        "spark_rows": 1,
+        "oracle_rows": 1,
+        "err": None,
+    }
+
+
+def _write_round(d: Path, n: int, checks: dict) -> None:
+    (d / f"CORRECTNESS_r{n:02d}.json").write_text(json.dumps(checks))
+
+
+def _committed_keys() -> dict:
+    """Each query's sort key, read from the committed history
+    independently of the engine: (green at last check, its round if
+    green, name)."""
+    last = {}
+    history = {
+        int(p.stem.removeprefix("CORRECTNESS_r")): p
+        for p in REPO.glob("CORRECTNESS_r*.json")
+    }
+    for n, path in sorted(history.items()):
+        for name, c in json.loads(path.read_text()).items():
+            green = c["err"] is None and (
+                c["rows_match"] and c["schema_match"] and c["hash_match"]
+            )
+            last[name] = (n, green)
+    keys = {}
+    for name in workload.QUERIES:
+        n, green = last.get(name, (0, False))
+        keys[name] = (green, n if green else 0, name)
+    return keys
+
+
+def test_queries_permute_every_registration():
+    """The driver hash-checks only the first 50 entries of QUERIES:
+    reordering may never drop or repeat a query. ORACLES keeps the
+    registration order (load_all reorders only QUERIES), and every query
+    registers an oracle."""
+    names = list(workload.QUERIES)
+    assert len(names) == len(set(names))
+    assert sorted(names) == sorted(workload.ORACLES)
+
+
+def test_queries_follow_correctness_history():
+    """Along QUERIES the history-derived sort key never decreases: the
+    never-checked and red first, then greens by oldest round."""
+    keys = _committed_keys()
+    seq = [keys[n] for n in workload.QUERIES]
+    assert all(a <= b for a, b in zip(seq, seq[1:]))
+
+
+def test_correctness_order_rule(tmp_path):
+    _write_round(tmp_path, 1, {
+        "b_green_r1": _check(True),
+        "a_green_r1": _check(True),
+        "c_fixed_r2": _check(False),
+        "d_green_r2": _check(True),
+        "z_red": _check(True),
+        "gone": _check(False),
+    })
+    _write_round(tmp_path, 2, {
+        "c_fixed_r2": _check(True),
+        "d_green_r2": _check(True),
+        "z_red": {**_check(True), "err": "boom"},
+        "gone": _check(False),
+    })
+    # would green z_red and make y_new a red if read
+    (tmp_path / "CORRECTNESS_r09.json.bak").write_text(
+        json.dumps({"z_red": _check(True), "y_new": _check(False)})
+    )
+    (tmp_path / "CORRECTNESS_r9.txt").write_text("not json")
+    (tmp_path / "CORRECTNESS_rx.json").write_text("not json")
+    names = [
+        "d_green_r2", "z_red", "a_green_r1", "y_new", "c_fixed_r2",
+        "b_green_r1",
     ]
-    assert len(set(workload.R14_WINDOW)) == 50
-    assert workload.R14_WINDOW[:13] == [
-        "dedup_semdedup_twolevel",
-        "ann_imi_topk",
-        "ann_imi_recall",
-        "ann_recall_at_k",
-        "ann_sq8_recall",
-        "ann_matryoshka_recall",
-        "ann_mrr_ndcg",
-        "dedup_ngram_jaccard_pairs",
-        "j9_transitive_closure",
-        "t8_incremental_store_dedup",
-        "t11_late_data_drop",
-        "pipeline_gdpr_erasure",
-        *workload.R14_QUEUE,
+    assert workload.correctness_order(names, tmp_path) == [
+        "y_new",  # never checked, first; "gone" is not registered
+        "z_red",  # red at its last check, ahead of every green
+        "a_green_r1",  # oldest green round first, ties by name
+        "b_green_r1",
+        "c_fixed_r2",  # a later green overrides an earlier red
+        "d_green_r2",
     ]
-    assert workload.R14_WINDOW[13:19] == workload.R14_TOPUP_FIRST
-    assert workload.R14_WINDOW[19:21] == [
-        "t16_stream_near_dedup",
-        "pipeline_hrrt_insertion",
+
+
+def test_correctness_order_without_history_is_name_order(tmp_path):
+    assert workload.correctness_order(["b", "c", "a"], tmp_path) == [
+        "a", "b", "c"
     ]
-    assert len(workload.PRIORITY_ORDER) == len(set(workload.PRIORITY_ORDER))
-    unregistered = [
-        n for n in workload.PRIORITY_ORDER if n not in workload.QUERIES
-    ]
-    assert unregistered == []
+
+
+def test_new_round_rotates_the_window(tmp_path):
+    """A committed round that greens the current window moves it to the
+    back: the next window shares no name with it, with no code edit."""
+    for path in REPO.glob("CORRECTNESS_r*.json"):
+        (tmp_path / path.name).write_text(path.read_text())
+    window = list(workload.QUERIES)[:50]
+    assert workload.correctness_order(workload.QUERIES, tmp_path) == list(
+        workload.QUERIES
+    )
+    _write_round(tmp_path, 99, {n: _check(True) for n in window})
+    rotated = workload.correctness_order(workload.QUERIES, tmp_path)
+    assert not set(rotated[:50]) & set(window)
+    assert rotated[-50:] == sorted(window)
 
 
 def test_no_hugeint_oracle_output_columns(sf_dir):
@@ -106,22 +179,50 @@ def test_registry_consistency():
     import __spark_entry__ as se
 
     qs, os_ = se.queries(), se.oracle_sql()
-    assert set(os_) <= set(qs)
+    assert set(os_) == set(qs)
     assert len(qs) > 0
 
 
-def test_gdpr_roster_dedup_conf_identical_rows(spark, sf_dir):
-    """spark.loris.gdpr.rosterDedup=true adds a distinct before the
-    erasure roster broadcasts (bounding the driver-side collect to one
-    row per distinct user at corpus scale, r13 ADVICE item 1); the
-    anti-join tests key membership only, so the erased stores — and the
-    query's output — must be bit-identical either way."""
-    q = workload.QUERIES["pipeline_gdpr_erasure"]
-    base = sorted(map(tuple, q(spark, sf_dir).collect()))
-    spark.conf.set("spark.loris.gdpr.rosterDedup", "true")
-    try:
-        deduped = sorted(map(tuple, q(spark, sf_dir).collect()))
-    finally:
-        spark.conf.unset("spark.loris.gdpr.rosterDedup")
-    assert base == deduped
-    assert base
+def _broadcast_build_sides(plan: str) -> list:
+    """The detail block of each node directly under a BroadcastExchange
+    in a formatted physical plan description."""
+    tree, _, details = plan.partition("\n\n\n")
+    blocks = {
+        int(m.group(1)): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=\n\n|\Z)", details, re.M | re.S)
+    }
+    lines = tree.splitlines()
+    return [
+        blocks[int(re.search(r"\((\d+)\)", lines[i + 1]).group(1))]
+        for i, line in enumerate(lines)
+        if re.search(r"BroadcastExchange \(\d+\)", line)
+    ]
+
+
+def test_gdpr_roster_aggregated_before_broadcast(spark, sf_dir):
+    """Every erasure anti-join broadcasts a roster aggregated on user_id,
+    so the broadcast collects one driver row per erased user rather than
+    one per matching event. Read from the executed plans of the query's
+    store rewrites in the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    workload.QUERIES["pipeline_gdpr_erasure"](spark, sf_dir).collect()
+    plans = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > seen
+    ]
+    anti = [p for p in plans if "LeftAnti" in p]
+    assert len(anti) >= 2, plans
+    for plan in anti:
+        sides = _broadcast_build_sides(plan)
+        assert sides, plan
+        for side in sides:
+            assert re.match(r"\(\d+\) HashAggregate", side), side
+            assert re.search(r"^Keys \[1\]: \[user_id#\d+L?\]$", side, re.M), side
