@@ -3,8 +3,9 @@
 ``entry(spark)`` — flagship query smoke check at sf0.001.
 ``queries()``    — every implemented operator from SURVEY.md §2 (and the
                    training-data-pipeline extensions), (spark, sf_dir) -> DF.
-``oracle_sql()`` — matching DuckDB SQL per query (omitted only for
-                   genuinely non-SQL-expressible operators).
+``oracle_sql()`` — matching DuckDB SQL per query, golden oracles built
+                   from the sf0.01 correctness catalog (an entry is
+                   omitted only when its golden declines that catalog).
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ if _REPO not in sys.path:
 from loris_mri_spark import workload  # noqa: E402
 
 workload.load_all()
+
+_CHECK_SF = "/root/testdata/sf0.01"  # the correctness gate's catalog
 
 _PKG_ZIP: "str | None" = None
 
@@ -84,4 +87,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(workload.ORACLES)
+    resolved = {
+        name: oracle(_CHECK_SF) if callable(oracle) else oracle
+        for name, oracle in workload.ORACLES.items()
+    }
+    return {name: sql for name, sql in resolved.items() if sql is not None}

@@ -2,8 +2,10 @@
 
 Each query is registered with:
   - a Spark implementation  (spark, sf_dir) -> DataFrame
-  - an equivalent ANSI-SQL oracle string for DuckDB (or None for
-    non-SQL-expressible operators -> the driver runs a rows-only check)
+  - its DuckDB oracle: an ANSI-SQL string over the catalog's table views,
+    or a golden builder ``sf_dir -> SQL | None`` that replays the answer
+    from that catalog's parquet outside Spark, for operators DuckDB cannot
+    express (None: the replay cannot decide this catalog exactly)
 
 Every entry maps to one or more operators in SURVEY.md §2 (the key encodes
 the operator id). Column names/aliases are identical between the Spark plan
@@ -31,8 +33,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
+Oracle = str | Callable[[str], str | None]
+
 QUERIES: dict[str, QueryFn] = {}
-ORACLES: dict[str, str] = {}
+ORACLES: dict[str, Oracle] = {}  # a callable is called with the catalog dir
 
 # Shared-intermediate cache (the j7 pattern, workload/rules.py): several
 # contract-independent queries start from the same expensive pass (winnow
@@ -62,8 +66,9 @@ def shared_df(spark: SparkSession, key: tuple, build: Callable[[], DataFrame]) -
     return out
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a workload query and (optionally) its DuckDB oracle SQL."""
+def query(name: str, oracle: Oracle | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register a workload query and its DuckDB oracle: SQL, or a golden
+    builder called with the catalog directory under check."""
 
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn

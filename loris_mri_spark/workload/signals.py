@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from loris_mri_spark.catalog import load_table
+from loris_mri_spark.catalog import load_table, table_path
 from loris_mri_spark.workload import query
 
 _CHUNK = 24  # deliberately NOT a divisor of 64, so edge-padding is real
@@ -106,24 +106,21 @@ def c8_signal_chunk_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _blake2b_values_sql() -> "str | None":
-    """Golden VALUES oracle, computed INDEPENDENTLY of Spark at import
-    time: hashlib over the raw parquet via pyarrow (no catalog, no UDF
-    batching, no Spark session). DuckDB lacks blake2b, so the oracle is
-    the precomputed expected table — the same pattern as the S1-S7
-    fixture goldens. Recomputed from the driver's own sf0.01 parquet on
-    every import, so a testdata refresh can never strand a stale golden
-    (the r03 drift class). Returns None (rows-only fallback) when the
-    driver testdata is absent."""
+def _blake2b_values_sql(sf_dir: str) -> str:
+    """Golden VALUES oracle, computed INDEPENDENTLY of Spark from the
+    catalog under check: hashlib over its raw documents parquet via
+    pyarrow (no engine reader, no UDF batching, no Spark session).
+    DuckDB lacks blake2b, so the oracle is the precomputed expected
+    table — the same pattern as the S1-S7 fixture goldens. Derived from
+    the catalog it checks, so a testdata refresh can never strand a
+    stale golden (the r03 drift class)."""
     import hashlib
-    import os
 
-    path = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(path):
-        return None
     import pyarrow.parquet as pq
 
-    tb = pq.read_table(path, columns=["doc_id", "text"])
+    tb = pq.read_table(
+        table_path(sf_dir, "documents"), columns=["doc_id", "text"]
+    )
     rows = [
         "(CAST({} AS BIGINT), '{}')".format(
             i, hashlib.blake2b(t.encode("utf-8"), digest_size=32).hexdigest()
@@ -139,15 +136,15 @@ def _blake2b_values_sql() -> "str | None":
     )
 
 
-@query("c5_blake2b_hash", oracle=_blake2b_values_sql())
+@query("c5_blake2b_hash", oracle=_blake2b_values_sql)
 def c5_blake2b_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BLAKE2b file-hash (C5): the modern pipeline hashes every inserted
     file with blake2b (`nifti_insertion_pipeline.py:52-64`). No JVM
     built-in exists, so this is the engine's canonical SLOW-PATH pattern:
     an Arrow-batched pandas UDF (one Python call per ~10k-row batch, not
     per row). Correctness is pinned against hashlib in
-    tests/test_signals.py and by the import-time hashlib golden oracle
-    (see _blake2b_values_sql)."""
+    tests/test_signals.py and by a hashlib golden oracle built from the
+    catalog under check (see _blake2b_values_sql)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(StringType())

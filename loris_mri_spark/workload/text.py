@@ -16,12 +16,13 @@ from __future__ import annotations
 
 import os
 import re
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from loris_mri_spark.catalog import load_table
+from loris_mri_spark.catalog import load_table, table_path
 from loris_mri_spark.functions.texthash import (
     SQL_MD5_60,
     SQL_NORM,
@@ -1188,14 +1189,19 @@ _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 _SQL_TRIM = " "
 
 
-def _word_counts_java_norm(texts: "list") -> "dict[str, int]":
-    """Word-frequency table over raw document texts, normalized EXACTLY
-    like the Spark plan's tokens() (Java-regex whitespace semantics —
-    see _JAVA_WS). Shared by both golden-replay oracle builders."""
+@lru_cache
+def _doc_word_counts(sf_dir: str) -> "dict[str, int]":
+    """Word-frequency table over the catalog's raw document texts,
+    normalized EXACTLY like the Spark plan's tokens() (Java-regex
+    whitespace semantics — see _JAVA_WS). The replay input of the four
+    BPE golden builders, read once per catalog (read-only: shared)."""
     from collections import Counter
 
+    import pyarrow.parquet as pq
+
+    tb = pq.read_table(table_path(sf_dir, "documents"), columns=["text"])
     wc: Counter = Counter()
-    for text in texts:
+    for text in tb.column("text").to_pylist():
         if text is None:
             continue  # Spark's explode(tokens(NULL)) drops the row
         norm = _JAVA_WS.sub(" ", text).strip(_SQL_TRIM).lower()
@@ -1220,29 +1226,20 @@ def _bpe_values_sql(rows: "list") -> str:
     )
 
 
-def _bpe_merges_values_sql() -> "str | None":
+def _bpe_merges_values_sql(sf_dir: str) -> "str | None":
     """Golden VALUES oracle for the BPE merge table, computed
-    INDEPENDENTLY of Spark at import time from the driver's sf0.01
-    parquet (the vec_cosine_pairs_lsh pattern): the trainer is fully
-    deterministic (integer counts, total-order tie-break), so its exact
-    output is recomputable with a pure-Python replay. Recomputed on
-    every import so a testdata refresh can never strand a stale golden;
-    returns None (rows-only fallback) when the testdata is absent."""
-    import os
-
-    path = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(path):
-        return None
-    import pyarrow.parquet as pq
-
-    tb = pq.read_table(path, columns=["text"])
-    rows = bpe_replay(_word_counts_java_norm(tb.column("text").to_pylist()), _BPE_K)
+    INDEPENDENTLY of Spark from the catalog under check (the
+    vec_cosine_pairs_lsh pattern): the trainer is fully deterministic
+    (integer counts, total-order tie-break), so its exact output is
+    recomputable with a pure-Python replay. None when the corpus yields
+    no merge."""
+    rows = bpe_replay(_doc_word_counts(sf_dir), _BPE_K)
     if not rows:
         return None
     return _bpe_values_sql(rows)
 
 
-@query("text_bpe_train_merges", oracle=_bpe_merges_values_sql())
+@query("text_bpe_train_merges", oracle=_bpe_merges_values_sql)
 def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE TOKENIZER TRAINING, the distributed shape: learn the first
     {k} merge rules from the corpus — the op a training-data platform
@@ -1262,9 +1259,9 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold's CASE can never re-merge its own output because the merged
     token no longer equals `left`). No driver collect inside the loop;
     per-iteration localCheckpoint truncates the growing lineage
-    (vocab-sized — the j9 iterative pattern). Oracle: import-time
-    pure-Python golden replay (deterministic integer counts + total
-    tie-order)."""
+    (vocab-sized — the j9 iterative pattern). Oracle: pure-Python
+    golden replay over the catalog under check (deterministic integer
+    counts + total tie-order)."""
     d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(tokens("text")).alias("w"))
@@ -1352,7 +1349,7 @@ _BPE_VOCAB_K = 256
 # sublinearly (SCALE.md "bpe_min_count_prune" quantifies the bound on
 # this corpus). Train-only: the ENCODE side still covers every type,
 # exactly like production tokenizer trainers. Default 1 (no pruning) —
-# inert at test scales, where the import-time goldens pin exact parity;
+# inert at test scales, where the replay goldens pin exact parity;
 # the threshold>1 path is parity-tested in tests/test_corpus.py. Both
 # the engine plan and the replay oracles read THIS constant.
 _BPE_MIN_COUNT = int(os.environ.get("LORIS_BPE_MIN_COUNT", "1"))
@@ -1392,22 +1389,14 @@ def bpe_replay_segments(
     return syms
 
 
-def _bpe_vocab_values_sql() -> "str | None":
+def _bpe_vocab_values_sql(sf_dir: str) -> "str | None":
     """Golden VALUES oracle for the k=256 vocab-local trainer — same
-    recipe as _bpe_merges_values_sql (import-time pure-Python replay of
-    the deterministic trainer on the driver's sf0.01 parquet), at the
-    realistic merge count. On this corpus the vocabulary EXHAUSTS before
-    256 merges (every word becomes one symbol), so the golden also pins
-    the early-stop semantics."""
-    import os
-
-    path = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(path):
-        return None
-    import pyarrow.parquet as pq
-
-    tb = pq.read_table(path, columns=["text"])
-    wc = _word_counts_java_norm(tb.column("text").to_pylist())
+    recipe as _bpe_merges_values_sql (pure-Python replay of the
+    deterministic trainer on the catalog under check), at the realistic
+    merge count. On the sf0.01 corpus the vocabulary EXHAUSTS before 256
+    merges (every word becomes one symbol), so the golden also pins the
+    early-stop semantics."""
+    wc = _doc_word_counts(sf_dir)
     rows = bpe_replay(
         {w: c for w, c in wc.items() if c >= _BPE_MIN_COUNT}, _BPE_VOCAB_K
     )
@@ -1416,7 +1405,7 @@ def _bpe_vocab_values_sql() -> "str | None":
     return _bpe_values_sql(rows)
 
 
-@query("text_bpe_train_vocab", oracle=_bpe_vocab_values_sql())
+@query("text_bpe_train_vocab", oracle=_bpe_vocab_values_sql)
 def text_bpe_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training at a REALISTIC merge count (k=256) — the
     scale-safe merge phase. text_bpe_train_merges (k=8) proved the
@@ -1437,8 +1426,8 @@ def text_bpe_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged pair), with zero Spark jobs inside the loop. 100-TB
     shape: corpus pass scales out; merge phase is corpus-size-
     independent, with the min-count prune (_BPE_MIN_COUNT) bounding the
-    type table a noisy crawl ships to it. Oracle: import-time golden
-    replay at the same k and threshold — an INDEPENDENT from-scratch
+    type table a noisy crawl ships to it. Oracle: golden replay over the
+    catalog under check at the same k and threshold — an INDEPENDENT from-scratch
     recount implementation, so parity is a real check of the
     incremental index maintenance."""
     from loris_mri_spark.operators.bpe import bpe_train_incremental
@@ -1507,21 +1496,13 @@ def _bpe_replay_segments_all(
     return segs
 
 
-def _bpe_apply_values_sql() -> "str | None":
+def _bpe_apply_values_sql(sf_dir: str) -> "str | None":
     """Golden VALUES oracle for the apply side, derived from the
     replay's FINAL TRAINING STATE (bpe_replay_segments) — a genuinely
     different path from the engine's trainer + rank-order re-encoding,
     so parity checks the classic BPE invariant that applying learned
     merges in order reproduces the training segmentation."""
-    import os
-
-    path = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(path):
-        return None
-    import pyarrow.parquet as pq
-
-    tb = pq.read_table(path, columns=["text"])
-    wc = _word_counts_java_norm(tb.column("text").to_pylist())
+    wc = _doc_word_counts(sf_dir)
     segs = _bpe_replay_segments_all(wc)
     freq: dict = {}
     for w, c in wc.items():
@@ -1544,7 +1525,7 @@ def _bpe_apply_values_sql() -> "str | None":
     )
 
 
-@query("text_bpe_apply_subwords", oracle=_bpe_apply_values_sql())
+@query("text_bpe_apply_subwords", oracle=_bpe_apply_values_sql)
 def text_bpe_apply_subwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLY side of BPE tokenizer training: tokenize the corpus
     with the k=256 learned merges and report the top subword tokens by
@@ -1559,7 +1540,7 @@ def text_bpe_apply_subwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-counts weighted sums. At production scale the encoded
     types->subwords table then broadcast-joins against the corpus for
     full tokenization; here the weighted top-k IS the deliverable.
-    Oracle: import-time golden from the replay's final TRAINING state —
+    Oracle: golden from the replay's final TRAINING state —
     re-encoding with learned rules must reproduce the training
     segmentation (the classic BPE invariant), so the two sides compute
     the answer via genuinely different paths."""
@@ -1610,22 +1591,14 @@ def text_bpe_apply_subwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_tokenize_map_sql() -> "str | None":
+def _bpe_tokenize_map_sql(sf_dir: str) -> "str | None":
     """Golden types->subword-count map for the distributed tokenize
     path, from the replay's final training state (the apply-side
     recipe via _bpe_replay_segments_all); the corpus-side join and
     aggregation stay LIVE SQL in the oracle, so DuckDB independently
     re-tokenizes every document against the golden map."""
-    import os
-
-    path = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(path):
-        return None
-    import pyarrow.parquet as pq
-
-    tb = pq.read_table(path, columns=["text"])
-    wc = _word_counts_java_norm(tb.column("text").to_pylist())
-    # k=8 (not the vocab query's 256): this corpus EXHAUSTS at k=256
+    wc = _doc_word_counts(sf_dir)
+    # k=8 (not the vocab query's 256): sf0.01's corpus EXHAUSTS at k=256
     # (every type one symbol, fertility uniformly 1.0) — partial merges
     # keep per-doc subword counts varied, a stronger value-hash check.
     segs = _bpe_replay_segments_all(wc, _BPE_K)
@@ -1654,7 +1627,7 @@ def _bpe_tokenize_map_sql() -> "str | None":
     """
 
 
-@query("text_bpe_tokenize_corpus", oracle=_bpe_tokenize_map_sql())
+@query("text_bpe_tokenize_corpus", oracle=_bpe_tokenize_map_sql)
 def text_bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION tokenization path the apply-side docstring
     promises: per-document BPE token counts (plus fertility =

@@ -10,10 +10,12 @@ stable on both sides.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from loris_mri_spark.catalog import load_table
+from loris_mri_spark.catalog import load_table, table_path
 from loris_mri_spark.operators.vectors import (
     as_double,
     cosine,
@@ -660,34 +662,31 @@ def dedup_semdedup_cellstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_values_sql() -> "str | None":
+@lru_cache
+def _lsh_values_sql(sf_dir: str) -> "str | None":
     """Golden VALUES oracle for the hyperplane-LSH pairs, computed
-    INDEPENDENTLY of Spark at import time: the LSH is fully
-    deterministic (md5-seeded planes), so its exact output is
+    INDEPENDENTLY of Spark from the catalog under check: the LSH is
+    fully deterministic (md5-seeded planes), so its exact output is
     recomputable with numpy + pure-Python folds from the raw parquet —
     no Spark session, no JVM. Signature bits use the same numpy matmul
     as the engine's pandas UDF; the verification cosine replays the
     JVM's sequential left-fold operation order exactly, with numpy only
     pre-filtering candidates (anything within 1e-6 of the threshold is
-    re-decided by the faithful fold). Recomputed from the driver's own
-    sf0.01 parquet on every import, so a testdata refresh can never
-    strand a stale golden. Returns None (rows-only fallback) when the
-    driver testdata is absent."""
+    re-decided by the faithful fold). Memoised per catalog: the pair
+    listing and the cluster oracle share it. None when no pair
+    verifies."""
     import math
-    import os
     from collections import defaultdict
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
-
-    path = "/root/testdata/sf0.01/embeddings.parquet"
-    if not os.path.exists(path):
-        return None
     import pyarrow.parquet as pq
 
     from loris_mri_spark.operators.vectors import _hyperplanes
 
-    tb = pq.read_table(path, columns=["vec_id", "embedding"])
+    tb = pq.read_table(
+        table_path(sf_dir, "embeddings"), columns=["vec_id", "embedding"]
+    )
     ids = tb.column("vec_id").to_pylist()
     mat = np.asarray(
         [[float(x) for x in e] for e in tb.column("embedding").to_pylist()],
@@ -745,12 +744,12 @@ def _lsh_values_sql() -> "str | None":
     return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(i, j, cos_r)"
 
 
-def _lsh_clusters_sql() -> "str | None":
+def _lsh_clusters_sql(sf_dir: str) -> "str | None":
     """Components oracle over the deterministic LSH pair graph: the
-    import-time golden pair VALUES (see _lsh_values_sql) feed a
+    catalog's golden pair VALUES (see _lsh_values_sql) feed a
     recursive-CTE min-label reachability — fully independent of the
     engine's frontier-loop implementation."""
-    pairs = _lsh_values_sql()
+    pairs = _lsh_values_sql(sf_dir)
     if pairs is None:
         return None
     return f"""
@@ -767,7 +766,7 @@ def _lsh_clusters_sql() -> "str | None":
     """
 
 
-@query("vec_cosine_clusters", oracle=_lsh_clusters_sql())
+@query("vec_cosine_clusters", oracle=_lsh_clusters_sql)
 def vec_cosine_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup CLUSTERS: the hyperplane-LSH cosine pair graph
     collapsed to connected components via min-label propagation
@@ -783,7 +782,7 @@ def vec_cosine_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.select(F.col("node").alias("vec_id"), "component")
 
 
-@query("vec_cosine_pairs_lsh", oracle=_lsh_values_sql())
+@query("vec_cosine_pairs_lsh", oracle=_lsh_values_sql)
 def vec_cosine_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All vector pairs with cosine >= 0.45 found via random-hyperplane
     LSH (64 planes, 16 bands of 4) + exact verification — the
@@ -792,9 +791,9 @@ def vec_cosine_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     full cross product on this weakly-clustered corpus) at measured
     recall 0.94/0.93 (sf0.1/sf0.01, deterministic — planes are seeded).
     DuckDB cannot express the LSH, but the output is deterministic, so
-    the oracle is an import-time golden recomputed independently in
-    numpy/pure Python (_lsh_values_sql); tests additionally assert
-    output ⊆ brute force and recall >= 0.9."""
+    the oracle is a golden recomputed independently in numpy/pure
+    Python from the catalog under check (_lsh_values_sql); tests
+    additionally assert output ⊆ brute force and recall >= 0.9."""
     out = _lsh_pairs(spark, sf_dir)
     return out.select("i", "j", F.round("cos", 6).alias("cos_r"))
 
@@ -1285,20 +1284,16 @@ def ann_mrr_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Two-level (IMI-style) quantizer queries — registered late-r8, first
 # driver-checked in r9. Fixed hyper-parameters shared by the engine
-# queries and their import-time golden replays.
+# queries and their golden replays.
 _TL_KC, _TL_KF, _TL_ITER = 3, 3, 2
 
 
-_TL_REPLAY_MEMO: list = []  # one-import memo: three oracles share one replay
-
-
-def _two_level_replay() -> "tuple | None":
+@lru_cache
+def _two_level_replay(sf_dir: str) -> "tuple | None":
     """Pure numpy replay of kmeans_cells_two_level(k_coarse=3, k_fine=3)
-    on the driver's sf0.01 embeddings — the shared engine-independent
-    base for the golden oracles below (the _lsh_values_sql
-    discipline: no Spark, no JVM; recomputed per import so a testdata
-    refresh can never strand a stale golden — memoized only WITHIN one
-    import, where the testdata cannot change).
+    on the catalog's embeddings — the shared engine-independent base for
+    the golden oracles below (the _lsh_values_sql discipline: no Spark,
+    no JVM), memoised per catalog so the three share one replay.
 
     Bit-parity argument: given identical cell MEMBERSHIPS, everything
     downstream is bit-identical on both sides (fine training is the same
@@ -1309,27 +1304,15 @@ def _two_level_replay() -> "tuple | None":
     that wobble can only surface by flipping an argmax decision. So the
     replay self-guards: if any vector's top-2 coarse cosine margin in
     any round is below 1e-9 (six orders above ulp noise), it returns
-    None and the queries downgrade to the driver's rows-only check.
+    None and the three goldens decline that catalog.
 
     Returns (ids, mat, fine_cells: id->cell, centroids: cell->vector)."""
-    if _TL_REPLAY_MEMO:
-        return _TL_REPLAY_MEMO[0]
-    out = _two_level_replay_impl()
-    _TL_REPLAY_MEMO.append(out)
-    return out
-
-
-def _two_level_replay_impl() -> "tuple | None":
-    import os
-
     import numpy as np
-
-    path = "/root/testdata/sf0.01/embeddings.parquet"
-    if not os.path.exists(path):
-        return None
     import pyarrow.parquet as pq
 
-    tb = pq.read_table(path, columns=["vec_id", "embedding"])
+    tb = pq.read_table(
+        table_path(sf_dir, "embeddings"), columns=["vec_id", "embedding"]
+    )
     ids = np.array(tb.column("vec_id").to_pylist(), dtype=np.int64)
     mat = np.array(
         [[float(x) for x in e] for e in tb.column("embedding").to_pylist()],
@@ -1388,14 +1371,14 @@ def _two_level_replay_impl() -> "tuple | None":
     return ids, mat, fine_cells, centroids
 
 
-def _imi_golden_sql() -> "str | None":
+def _imi_golden_sql(sf_dir: str) -> "str | None":
     """Golden VALUES oracle for ann_imi_topk: replay the two-level
     training (self-guarded, see _two_level_replay), then the ivf_topk
     probe/score/rank semantics with sequential-fold cosines replaying
     the JVM operation order exactly."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    rep = _two_level_replay()
+    rep = _two_level_replay(sf_dir)
     if rep is None:
         return None
     ids, mat, fine_cells, centroids = rep
@@ -1434,7 +1417,7 @@ def _imi_golden_sql() -> "str | None":
     )
 
 
-def _semdedup_twolevel_golden_sql() -> "str | None":
+def _semdedup_twolevel_golden_sql(sf_dir: str) -> "str | None":
     """Golden VALUES oracle for dedup_semdedup_twolevel: the two-level
     replay feeds THE SAME per-cell kernel the engine runs
     (semdedup_cell_kernel — importable without Spark by design), with
@@ -1445,7 +1428,7 @@ def _semdedup_twolevel_golden_sql() -> "str | None":
 
     import pandas as pd
 
-    rep = _two_level_replay()
+    rep = _two_level_replay(sf_dir)
     if rep is None:
         return None
     ids, mat, fine_cells, centroids = rep
@@ -1487,7 +1470,7 @@ def _semdedup_twolevel_golden_sql() -> "str | None":
     )
 
 
-@query("ann_imi_topk", oracle=_imi_golden_sql())
+@query("ann_imi_topk", oracle=_imi_golden_sql)
 def ann_imi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IMI-style ANN (inverted multi-index shape, Babenko & Lempitsky
     2012): the corpus is partitioned by the TWO-LEVEL trained quantizer
@@ -1496,8 +1479,8 @@ def ann_imi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainer's O(n^1.5), measured 11.4 vs 17.5 s at 100x in
     BENCH_SF1.json), then standard IVF probing over the FINE cells:
     2 best cells per query by centroid cosine, exact scoring inside.
-    Oracle: import-time golden replay, self-guarded on training-margin
-    ties (_two_level_replay)."""
+    Oracle: golden replay over the catalog under check, self-guarded on
+    training-margin ties (_two_level_replay)."""
     from loris_mri_spark.operators.vectors import (
         ivf_topk,
         kmeans_cells_two_level,
@@ -1528,14 +1511,14 @@ def ann_imi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("dedup_semdedup_twolevel", oracle=_semdedup_twolevel_golden_sql())
+@query("dedup_semdedup_twolevel", oracle=_semdedup_twolevel_golden_sql)
 def dedup_semdedup_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over the TWO-LEVEL trained quantizer — the corpus-scale
     configuration (k ~ sqrt(n) cells trained in O(n^1.25); the
     oracle-pinned dedup_semdedup keeps the decimal-exact flat trainer
     for SQL-replayable bit-parity). Same per-cell kernel, same keep
     rule; k_coarse = k_fine = 3 here so the golden replay stays
-    import-cheap at sf0.01. Oracle: golden VALUES through the SAME
+    cheap at sf0.01. Oracle: golden VALUES through the SAME
     kernel (engine-independence lives in the training replay + fold
     cosines; the driver check certifies the Spark plumbing)."""
     return dedup_semdedup(
@@ -1543,13 +1526,13 @@ def dedup_semdedup_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _imi_recall_golden_sql() -> "str | None":
+def _imi_recall_golden_sql(sf_dir: str) -> "str | None":
     """Golden VALUES oracle for ann_imi_recall: recall@5 of the IMI
     (two-level) index against exact brute force, both sides replayed
     with sequential-fold cosines (bit-identical to the JVM fold), so the
     top-5 SETS — not just scores — match the engine exactly. Shares the
     one memoized _two_level_replay with the two oracles above."""
-    rep = _two_level_replay()
+    rep = _two_level_replay(sf_dir)
     if rep is None:
         return None
     ids, mat, fine_cells, centroids = rep
@@ -1592,7 +1575,7 @@ def _imi_recall_golden_sql() -> "str | None":
     )
 
 
-@query("ann_imi_recall", oracle=_imi_recall_golden_sql())
+@query("ann_imi_recall", oracle=_imi_recall_golden_sql)
 def ann_imi_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the IMI (two-level quantizer) index vs exact brute
     force at the SAME probe budget as ann_recall_at_k's IVF row

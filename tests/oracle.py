@@ -10,9 +10,15 @@ import duckdb
 import pandas as pd
 
 from loris_mri_spark.catalog import TESTDATA_TABLES, table_path
+from loris_mri_spark.workload import Oracle
 
 
-def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
+def run_oracle(oracle: Oracle, sf_dir: str) -> pd.DataFrame:
+    """Run a query's oracle on the catalog in ``sf_dir``: SQL as is, a
+    golden builder on the SQL it returns for ``sf_dir``."""
+    sql = oracle(sf_dir) if callable(oracle) else oracle
+    if sql is None:
+        raise AssertionError(f"{oracle.__name__} declines the catalog {sf_dir}")
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
@@ -46,9 +52,9 @@ def canonical(df: pd.DataFrame) -> list[tuple]:
     return sorted(rows)
 
 
-def assert_parity(spark_df, oracle_sql: str, sf_dir: str, name: str = "") -> None:
+def assert_parity(spark_df, oracle: Oracle, sf_dir: str, name: str = "") -> None:
     actual = spark_df.toPandas()
-    expected = run_oracle(oracle_sql, sf_dir)
+    expected = run_oracle(oracle, sf_dir)
     assert sorted(actual.columns) == sorted(expected.columns), (
         f"{name}: column mismatch spark={sorted(actual.columns)} "
         f"oracle={sorted(expected.columns)}"
