@@ -10,12 +10,15 @@ ceil(listed_bytes / spark.sql.files.maxPartitionBytes))`` tasks, i.e.
 one per slot for a small listing and one per 128 MB of file bytes at
 scale. Spark alone would charge every file a 4 MB open cost and so split
 192 small DICOMs into 6 tasks. A Python task has a fixed floor before
-the parser runs: about 0.28 s per task for an identity `mapInPandas` on
-`local[2]` (4-vCPU host, Python 3.11, PySpark 4.1), mostly
+the parser runs: about 0.07 s per task for an identity `mapInPandas` on
+a `get_spark` session on `local[2]` (4-vCPU host, Python 3.11, PySpark
+4.1). On a vanilla session it is 0.27 s, mostly
 `importlib.invalidate_caches()` in the worker's per-task set-up
-re-reading the directory of `pyspark.zip`. Parsing is cheap next to it
-(192 small DICOMs parse in ~4 ms in one process), so the task count, not
-the bytes, sets a small scan's cost.
+re-reading the zip archives on the worker path, which the engine's
+worker daemon (`loris_mri_spark._daemon`) skips. Parsing is cheap next
+to either (192 small DICOMs parse in ~4 ms in one process), so the task
+count, not the bytes, sets a small scan's cost: at the 0.07 s floor,
+unpacked scans still made the perfbench ingest run 11% slower.
 """
 
 from loris_mri_spark.sources.archive import read_tar_members

@@ -1,6 +1,6 @@
 """The one binaryFile scan every ``sources`` reader starts from, packed to
-the slots (the rule and the Python-task floor it answers are in the
-package docstring).
+the slots (the rule, the Python-task floor it answers and what packing
+still saves at that floor are in the package docstring).
 """
 
 from __future__ import annotations
