@@ -1,8 +1,9 @@
 """Vectorized pandas UDAF (GROUPED_AGG) — the one Python-interop shape
-not exercised elsewhere (SCALAR pandas_udf: functions/texthash.py;
-GROUPED_MAP applyInPandas: operators/media.py; MAP mapInPandas:
-sources/*; ARROW mapInArrow: workload/signals.py; UDTF:
-workload/sinkops.py).
+not exercised elsewhere (SCALAR pandas_udf: workload/signals.py;
+GROUPED_MAP applyInPandas: workload/signals.py; MAP mapInPandas: the
+workload/pipeline.py blake2b stream hash; ARROW mapInArrow:
+sources/files.py map_rows, which every file parser emits through; UDTF:
+workload/ingest.py).
 
 NOTE: this module deliberately has NO ``from __future__ import
 annotations`` — pandas_udf resolves REAL type hints (pd.Series -> int)

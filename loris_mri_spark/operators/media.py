@@ -7,11 +7,11 @@ the path/hash/params row the reference keeps for NIfTI/MINC blobs
 (`python/lib/imaging_lib/nifti.py`, `nifti_insertion_pipeline.py:88-92`).
 
 Processing model: decode / feature-extract / resize / frame-sample are
-Arrow-batched `mapInPandas` stages. The BYTE-LEVEL math here (block-mean
-"resize" of a raw grayscale interpretation, frame slicing, per-frame
-checksums) is real and tested, and PNG, BASELINE JPEG (grayscale and
-3-component 4:4:4 color), MJPEG-in-AVI video frames and PCM WAV all
-decode NATIVELY (stdlib/numpy). The remaining codec seam — subsampled/
+Arrow-batched map stages (`sources.files.map_rows`). The BYTE-LEVEL math
+here (block-mean "resize" of a raw grayscale interpretation, frame
+slicing, per-frame checksums) is real and tested, and PNG, BASELINE JPEG
+(grayscale and 3-component 4:4:4 color), MJPEG-in-AVI video frames and
+PCM WAV all decode NATIVELY (stdlib/numpy). The remaining codec seam — subsampled/
 progressive JPEG, inter-frame video codecs — raises NotImplementedError
 unless a decoder callback is injected; the runtime image has no imaging
 libraries, and the Spark-side plumbing (schemas, batching, partitioning)
@@ -23,12 +23,13 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
-from typing import Callable, Iterator
+from typing import Any, Callable, Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from loris_mri_spark.sources.files import map_rows
 
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, side int, mean_px double, std_px double, "
@@ -181,43 +182,34 @@ def extract_features(df: DataFrame, content_col: str, id_col: str,
     (crop to the largest square), block-mean 'resize' to
     thumb_side x thumb_side, emit dims + pixel stats + thumbnail."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                px = decode_media(bytes(blob), "image/raw")
-                side = int(math.isqrt(len(px)))
-                img = px[: side * side].reshape(side, side).astype("int64")
-                n = side * side
-                # Exact integer sums -> ONE IEEE division/sqrt each, the
-                # same operation order any SQL engine uses. numpy's
-                # pairwise float mean()/std() accumulates differently in
-                # the last bits, which is engine-divergent; this is
-                # bit-identical to SUM(v)/n and
-                # sqrt(SUM(v*v)/n - (SUM(v)/n)^2) in DuckDB.
-                s = int(img.sum())
-                sq = int((img * img).sum())
-                mean = s / n
-                var = sq / n - mean * mean
-                block = max(side // thumb_side, 1)
-                crop = img[: block * thumb_side, : block * thumb_side]
-                bsums = crop.reshape(
-                    thumb_side, block, thumb_side, block
-                ).sum(axis=(1, 3))
-                area = block * block
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "n_bytes": len(px),
-                        "side": side,
-                        "mean_px": mean,
-                        "std_px": math.sqrt(var if var > 0 else 0.0),
-                        "thumb": [int(v) / area for v in bsums.ravel()],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def features(i: int, blob: bytes) -> Iterator[dict[str, Any]]:
+        px = decode_media(blob, "image/raw")
+        side = int(math.isqrt(len(px)))
+        img = px[: side * side].reshape(side, side).astype("int64")
+        n = side * side
+        # Exact integer sums -> ONE IEEE division/sqrt each, the same
+        # operation order any SQL engine uses. numpy's pairwise float
+        # mean()/std() accumulates differently in the last bits, which is
+        # engine-divergent; this is bit-identical to SUM(v)/n and
+        # sqrt(SUM(v*v)/n - (SUM(v)/n)^2) in DuckDB.
+        s = int(img.sum())
+        sq = int((img * img).sum())
+        mean = s / n
+        var = sq / n - mean * mean
+        block = max(side // thumb_side, 1)
+        crop = img[: block * thumb_side, : block * thumb_side]
+        bsums = crop.reshape(thumb_side, block, thumb_side, block).sum(axis=(1, 3))
+        area = block * block
+        yield {
+            "doc_id": i,
+            "n_bytes": len(px),
+            "side": side,
+            "mean_px": mean,
+            "std_px": math.sqrt(var if var > 0 else 0.0),
+            "thumb": [int(v) / area for v in bsums.ravel()],
+        }
 
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(df.select(id_col, content_col), features, FEATURE_SCHEMA)
 
 
 PNG_FEATURE_SCHEMA = (
@@ -226,38 +218,32 @@ PNG_FEATURE_SCHEMA = (
 )
 
 
+def _png_feature_rows(i: int, blob: bytes) -> Iterator[dict[str, Any]]:
+    arr = decode_png_bytes(blob)
+    if arr is None:
+        return
+    gray = arr if arr.ndim == 2 else arr[:, :, 0]
+    h, w = gray.shape
+    s = int(gray.astype("int64").sum())
+    yield {
+        "doc_id": i,
+        "n_png_bytes": len(blob),
+        "width": w,
+        "height": h,
+        "mean_px": s / (h * w),
+        "px_00": int(gray[0, 0]),
+        "px_77": int(gray[-1, -1]),
+    }
+
+
 def extract_png_features(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """Decode a PNG binary column with the native stdlib reader and emit
     dims + exact pixel stats (integer sum -> one IEEE division, the
     oracle-reproducible contract shared with extract_features). Undecodable
     blobs are dropped — the violation-row pattern, not a task failure."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in PNG_FEATURE_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(blob)
-                arr = decode_png_bytes(b)
-                if arr is None:
-                    continue
-                gray = arr if arr.ndim == 2 else arr[:, :, 0]
-                h, w = gray.shape
-                s = int(gray.astype("int64").sum())
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "n_png_bytes": len(b),
-                        "width": w,
-                        "height": h,
-                        "mean_px": s / (h * w),
-                        "px_00": int(gray[0, 0]),
-                        "px_77": int(gray[-1, -1]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(run, schema=PNG_FEATURE_SCHEMA)
+    return map_rows(
+        df.select(id_col, content_col), _png_feature_rows, PNG_FEATURE_SCHEMA
+    )
 
 
 WAV_SCHEMA = (
@@ -349,40 +335,30 @@ WAV_FEATURES_SCHEMA = (
 )
 
 
+def _wav_rows(
+    parse: Callable[[bytes], "dict | None"],
+) -> Callable[[str, bytes], Iterator[dict[str, Any]]]:
+    def rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+        meta = parse(content)
+        yield {"path": path, "is_wav": meta is not None, **(meta or {})}
+
+    return rows
+
+
 def read_wav_features(df: DataFrame) -> DataFrame:
     """binaryFile rows (path, content) -> WAV metadata + signal features."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in WAV_FEATURES_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                meta = wav_signal_features(bytes(content))
-                if meta is None:
-                    rows.append({"path": path, "is_wav": False})
-                else:
-                    rows.append({"path": path, "is_wav": True, **meta})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(run, schema=WAV_FEATURES_SCHEMA)
+    return map_rows(
+        df.select("path", "content"),
+        _wav_rows(wav_signal_features),
+        WAV_FEATURES_SCHEMA,
+    )
 
 
 def read_wav_meta(df: DataFrame) -> DataFrame:
     """binaryFile rows (path, content) -> WAV metadata + PCM stats."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in WAV_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                meta = parse_wav_bytes(bytes(content))
-                if meta is None:
-                    rows.append({"path": path, "is_wav": False})
-                else:
-                    rows.append({"path": path, "is_wav": True, **meta})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(run, schema=WAV_SCHEMA)
+    return map_rows(
+        df.select("path", "content"), _wav_rows(parse_wav_bytes), WAV_SCHEMA
+    )
 
 
 def sample_frames(df: DataFrame, content_col: str, id_col: str,
@@ -391,24 +367,16 @@ def sample_frames(df: DataFrame, content_col: str, id_col: str,
     every k-th full frame, emit per-frame checksums (the video analogue
     of the chunk pyramid)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(blob)
-                n_frames = len(b) // frame_bytes
-                for f in range(0, n_frames, every_k):
-                    frame = b[f * frame_bytes : (f + 1) * frame_bytes]
-                    rows.append(
-                        {
-                            "doc_id": int(i),
-                            "frame_idx": f,
-                            "frame_md5": hashlib.md5(frame).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_md5"])
+    def frames(i: int, b: bytes) -> Iterator[dict[str, Any]]:
+        for f in range(0, len(b) // frame_bytes, every_k):
+            frame = b[f * frame_bytes : (f + 1) * frame_bytes]
+            yield {
+                "doc_id": i,
+                "frame_idx": f,
+                "frame_md5": hashlib.md5(frame).hexdigest(),
+            }
 
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_rows(df.select(id_col, content_col), frames, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,11 @@
 """File-format sources (SURVEY §2.1) — every reader is a DataFrame source:
-a binaryFile scan (`files.binary_files`; csv/json for sidecars) feeding
-Arrow-batched `mapInPandas` parsers. The parse code is pure stdlib
-(struct/tarfile/gzip): NIfTI-1 headers and explicit-VR DICOM are fixed
-public binary layouts, so no imaging library is required for the header
-surface the reference reads.
+a binaryFile scan (`files.binary_files`; csv/json for sidecars) feeding a
+per-file parser through `files.map_rows`, the one Arrow map that turns
+the dicts a parser yields into rows of the reader's DDL schema (missing
+key -> NULL, ints exact at 64 bits, NaN -> NULL). The parse code is pure
+stdlib (struct/tarfile/gzip): NIfTI-1 headers and explicit-VR DICOM are
+fixed public binary layouts, so no imaging library is required for the
+header surface the reference reads.
 
 Task packing: each binaryFile scan runs in ``max(defaultParallelism,
 ceil(listed_bytes / spark.sql.files.maxPartitionBytes))`` tasks, i.e.

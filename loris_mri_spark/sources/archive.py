@@ -4,23 +4,21 @@ Reference: nested `.tar` -> `.tar.gz` DICOM archive extraction
 (`/root/reference/python/lib/imaging.py:1150-1174`,
 `uploadNeuroDB/NeuroDB/FileDecompress.pm`). The reference extracts to a
 temp dir on one host; the engine instead explodes archive MEMBERS into
-rows inside the scan tasks (binaryFile + mapInPandas + stdlib tarfile), so
-a directory of thousands of archives fans out across executors and the
-member bytes flow straight into downstream parsers (e.g. the DICOM header
-source) without touching a shared filesystem.
+rows inside the scan tasks (binaryFile + `files.map_rows` + stdlib
+tarfile), so a directory of thousands of archives fans out across
+executors and the member bytes flow straight into downstream parsers
+(e.g. the DICOM header source) without touching a shared filesystem.
 """
 
 from __future__ import annotations
 
 import io
 import tarfile
-from typing import Iterator
-
-import pandas as pd
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from loris_mri_spark.sources.files import binary_files
+from loris_mri_spark.sources.files import binary_files, map_rows
 
 MEMBER_SCHEMA = (
     "archive string, member string, size long, content binary"
@@ -31,44 +29,25 @@ MEMBER_SCHEMA = (
 _MAX_MEMBER_BYTES = 512 * 1024 * 1024
 
 
-def _explode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            try:
-                with tarfile.open(fileobj=io.BytesIO(bytes(content)), mode="r:*") as tar:
-                    for m in tar.getmembers():
-                        if not m.isfile():
-                            continue
-                        if m.size > _MAX_MEMBER_BYTES:
-                            # tarfile reads exactly the header-declared
-                            # size, so checking BEFORE read() bounds a
-                            # compressed bomb; emit the inventory row
-                            # (name+size) with NULL content instead of
-                            # materializing a multi-GiB cell (Arrow and
-                            # Spark binary cells top out near 2 GiB)
-                            rows.append(
-                                {
-                                    "archive": path,
-                                    "member": m.name,
-                                    "size": m.size,
-                                    "content": None,
-                                }
-                            )
-                            continue
-                        f = tar.extractfile(m)
-                        data = f.read() if f is not None else b""
-                        rows.append(
-                            {
-                                "archive": path,
-                                "member": m.name,
-                                "size": m.size,
-                                "content": data,
-                            }
-                        )
-            except tarfile.TarError:
-                continue  # non-archive input: classified out, not fatal
-        yield pd.DataFrame(rows, columns=["archive", "member", "size", "content"])
+def _member_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    try:
+        with tarfile.open(fileobj=io.BytesIO(content), mode="r:*") as tar:
+            for m in tar.getmembers():
+                if not m.isfile():
+                    continue
+                row = {"archive": path, "member": m.name, "size": m.size}
+                if m.size > _MAX_MEMBER_BYTES:
+                    # tarfile reads exactly the header-declared size, so
+                    # checking BEFORE read() bounds a compressed bomb;
+                    # emit the inventory row (name+size) with NULL content
+                    # instead of materializing a multi-GiB cell (Arrow and
+                    # Spark binary cells top out near 2 GiB)
+                    yield row
+                    continue
+                f = tar.extractfile(m)
+                yield {**row, "content": f.read() if f is not None else b""}
+    except tarfile.TarError:
+        return  # non-archive input: classified out, not fatal
 
 
 def read_tar_members(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -76,4 +55,4 @@ def read_tar_members(spark: SparkSession, path_glob: str) -> DataFrame:
     (archive, member, size, content) rows — a row-generating (UDTF-like)
     source; compose with the DICOM/NIfTI parsers for nested ingest."""
     files = binary_files(spark, path_glob).select("path", "content")
-    return files.mapInPandas(_explode_partition, schema=MEMBER_SCHEMA)
+    return map_rows(files, _member_rows, MEMBER_SCHEMA)

@@ -8,10 +8,10 @@ lookup for enhanced DICOM (`summary_get.py:160-173`).
 Spark-first shape: a binaryFile scan (`files.binary_files`) lists and
 reads the files distributively, packed into one task per slot for a
 small listing and one per 128 MB (`spark.sql.files.maxPartitionBytes`)
-of file bytes at scale, and an Arrow-batched `mapInPandas` runs the
-header parse per partition — the per-file Perl/pydicom loop becomes one
-scan stage. At 100 TB of DICOMs the output is a narrow header table; the
-pixel payload never leaves the scan (we slice headers only).
+of file bytes at scale, and `files.map_rows` runs the header parse over
+Arrow batches — the per-file Perl/pydicom loop becomes one scan stage.
+At 100 TB of DICOMs the output is a narrow header table; the pixel
+payload never leaves the scan (we slice headers only).
 
 The parser reads explicit-VR little-endian DICOM (preamble + 'DICM' +
 (group,element,VR,len,value) stream), implicit-VR little-endian
@@ -22,10 +22,7 @@ retired but present in archives — same walker, '>' byte order) and
 DEFLATED explicit-VR little-endian (1.2.840.10008.1.2.1.99 — bounded
 raw-inflate then the explicit walker), all with pure stdlib `struct`. The file-meta group (0002,
 always explicit VR per PS3.10) is walked first for the TransferSyntaxUID
-that picks the dataset walker. When the optional `pydicom` package is
-importable it is used instead (full transfer-syntax coverage); the stdlib
-path keeps the engine dependency-free for the header fields the reference
-extracts.
+that picks the dataset walker.
 """
 
 from __future__ import annotations
@@ -33,11 +30,9 @@ from __future__ import annotations
 import struct
 from typing import Any, Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 
-from loris_mri_spark.sources.files import binary_files
+from loris_mri_spark.sources.files import binary_files, map_rows
 
 # Tags the reference's summary extracts (summary_get.py:21-63).
 _TAGS = {
@@ -89,7 +84,7 @@ def _decode_value(vr: bytes, raw: bytes) -> Any:
     """Classify-don't-fail numeric decode (DCMSUM.pm skip semantics): a
     multi-valued DS/IS ("1.5\\\\2.5", legal at VM>1) or garbage numeric text
     yields its first parseable component or None — never an exception that
-    would kill the whole mapInPandas scan job."""
+    would kill the whole scan job."""
     val: Any = raw.decode("ascii", "replace").strip("\x00 ")
     if vr in (b"IS", b"DS"):
         if not val:
@@ -261,89 +256,21 @@ def parse_dicom_bytes(content: bytes) -> dict[str, Any]:
     return out
 
 
-def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    try:  # optional full-coverage path
-        import pydicom  # noqa: F401
-
-        have_pydicom = True
-    except Exception:
-        have_pydicom = False
-
-    for pdf in batches:
-        rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            if content is None:
-                # oversized-archive-member inventory rows (sources/
-                # archive.py caps extraction) carry NULL content:
-                # classify as non-DICOM, don't kill the scan task
-                rows.append({"path": path, "is_dicom": False})
-                continue
-            if have_pydicom:
-                rows.append({"path": path, **_parse_with_pydicom(bytes(content))})
-            else:
-                rows.append({"path": path, **parse_dicom_bytes(bytes(content))})
-        out = pd.DataFrame(rows)
-        for col in ("modality", "patient_name", "study_uid", "series_uid",
-                    "series_description"):
-            if col not in out:
-                out[col] = None
-        for col in ("series_number", "instance_number"):
-            if col not in out:
-                out[col] = None
-            out[col] = out[col].astype("Int32")
-        for col in ("echo_time", "repetition_time"):
-            if col not in out:
-                out[col] = None
-            out[col] = out[col].astype("float64")
-        yield out[[c.split(" ")[0] for c in DICOM_SCHEMA.split(", ")]]
-
-
-def _parse_with_pydicom(content: bytes) -> dict[str, Any]:
-    """pydicom path, incl. the enhanced-DICOM nested fallback (S2,
-    summary_get.py:160-173: scan sub-sequences with iterall when a tag is
-    absent at top level)."""
-    import io
-
-    import pydicom
-
-    try:
-        ds = pydicom.dcmread(io.BytesIO(content), stop_before_pixels=True)
-    except Exception:
-        return {"is_dicom": False}
-
-    def get(tag_name: str):
-        v = getattr(ds, tag_name, None)
-        if v is None:  # enhanced-DICOM fallback: search nested datasets
-            for el in ds.iterall():
-                if el.keyword == tag_name:
-                    return el.value
-        return v
-
-    def _f(v):
-        return float(v) if v is not None else None
-
-    def _i(v):
-        return int(v) if v is not None else None
-
-    return {
-        "is_dicom": True,
-        "modality": get("Modality"),
-        "patient_name": str(get("PatientName") or "") or None,
-        "study_uid": get("StudyInstanceUID"),
-        "series_uid": get("SeriesInstanceUID"),
-        "series_number": _i(get("SeriesNumber")),
-        "instance_number": _i(get("InstanceNumber")),
-        "series_description": get("SeriesDescription"),
-        "echo_time": _f(get("EchoTime")),
-        "repetition_time": _f(get("RepetitionTime")),
-    }
+def _header_rows(path: str, content: "bytes | None") -> Iterator[dict[str, Any]]:
+    if content is None:
+        # oversized-archive-member inventory rows (sources/archive.py caps
+        # extraction) carry NULL content: classify as non-DICOM, don't
+        # kill the scan task
+        yield {"path": path, "is_dicom": False}
+    else:
+        yield {"path": path, **parse_dicom_bytes(content)}
 
 
 def scan_dicom_dir(spark: SparkSession, path: str) -> DataFrame:
     """S1: distributed DICOM directory scan -> header table. One binaryFile
-    scan, one mapInPandas parse; pixel data stays inside the scan tasks."""
+    scan, one Arrow map parse; pixel data stays inside the scan tasks."""
     files = binary_files(spark, path).select("path", "content")
-    return files.mapInPandas(_parse_partition, schema=DICOM_SCHEMA)
+    return map_rows(files, _header_rows, DICOM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -13,10 +13,10 @@ Engine shape: the XML tree of nested <entry parameter="..."> elements is
 flattened into EAV rows — one row per <value> child (value_index preserves
 the multi-value order XML::Simple's ForceArray keeps, e.g. IMAGE_size's
 three dims) plus the gradient <processing> status — the same EAV feed the
-parameter_file pivot (J2) consumes. Parse runs Arrow-batched in
-mapInPandas over binaryFile; malformed XML CLASSIFIES (parse_ok=false row)
-instead of raising, like every other parser in sources/ (a raise inside a
-task kills the whole scan).
+parameter_file pivot (J2) consumes. Parse runs in `files.map_rows` over
+binaryFile; malformed XML CLASSIFIES (parse_ok=false row) instead of
+raising, like every other parser in sources/ (a raise inside a task kills
+the whole scan).
 """
 
 from __future__ import annotations
@@ -25,10 +25,9 @@ import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from loris_mri_spark.sources.files import binary_files
+from loris_mri_spark.sources.files import binary_files, map_rows
 
 DTIPREP_SCHEMA = (
     "path string, root_tag string, entry_path string, parameter string, "
@@ -133,19 +132,9 @@ def parse_dtiprep_xml_bytes(content: bytes) -> list[dict[str, Any]]:
     return rows
 
 
-_COLS = [c.split(" ")[0] for c in DTIPREP_SCHEMA.split(", ")]
-
-
-def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows: list[dict[str, Any]] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            for r in parse_dtiprep_xml_bytes(bytes(content)):
-                rows.append({"path": path, **r})
-        out = pd.DataFrame(rows, columns=_COLS)
-        for c in ("depth", "value_index"):
-            out[c] = out[c].astype("Int32")
-        yield out
+def _xml_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    for r in parse_dtiprep_xml_bytes(content):
+        yield {"path": path, **r}
 
 
 def read_dtiprep_xml(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -153,4 +142,4 @@ def read_dtiprep_xml(spark: SparkSession, path_glob: str) -> DataFrame:
     files; parsing is Arrow-batched per partition. At 100 TB the unit of
     work is one (small) XML file — partitioning by file is exactly right."""
     files = binary_files(spark, path_glob, "*.xml").select("path", "content")
-    return files.mapInPandas(_parse_partition, schema=DTIPREP_SCHEMA)
+    return map_rows(files, _xml_rows, DTIPREP_SCHEMA)

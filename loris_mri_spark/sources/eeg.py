@@ -8,9 +8,9 @@ format, so the engine parses it with stdlib only; CTF/EEGLAB readers plug
 into the same source via an injected loader callback (they need MNE,
 which this runtime does not ship).
 
-Spark-first shape: binaryFile + mapInPandas, one output row per channel
-carrying the channel's sample array — ready for the ephys chunk pyramid
-(workload/signals.py) and A7 range aggregation.
+Spark-first shape: binaryFile + `files.map_rows`, one output row per
+channel carrying the channel's sample array — ready for the ephys chunk
+pyramid (workload/signals.py) and A7 range aggregation.
 
 Memory note (the r13 streaming-hash pattern, workload/pipeline.py
 `_iter_file_chunks`): these parsers ride the binaryFile `content` column
@@ -26,11 +26,9 @@ import math
 import struct
 from typing import Any, Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 
-from loris_mri_spark.sources.files import binary_files
+from loris_mri_spark.sources.files import binary_files, map_rows
 
 EDF_CHANNEL_SCHEMA = (
     "path string, channel_idx int, label string, phys_dim string, "
@@ -114,19 +112,14 @@ def parse_edf_bytes(content: bytes) -> list[dict[str, Any]]:
     return rows
 
 
-def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [c.split(" ")[0] for c in EDF_CHANNEL_SCHEMA.split(", ")]
-    for pdf in batches:
-        rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            for r in parse_edf_bytes(bytes(content)):
-                rows.append({"path": path, **r})
-        yield pd.DataFrame(rows, columns=cols)
+def _edf_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    for r in parse_edf_bytes(content):
+        yield {"path": path, **r}
 
 
 def read_edf_channels(spark: SparkSession, path_glob: str) -> DataFrame:
     files = binary_files(spark, path_glob, "*.edf").select("path", "content")
-    return files.mapInPandas(_parse_partition, schema=EDF_CHANNEL_SCHEMA)
+    return map_rows(files, _edf_rows, EDF_CHANNEL_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -308,22 +301,14 @@ def parse_ctf_res4_bytes(content: bytes) -> dict[str, Any] | None:
     }
 
 
+def _ctf_header_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    hdr = parse_ctf_res4_bytes(content)
+    yield {"path": path, "is_readable": hdr is not None, **(hdr or {})}
+
+
 def read_ctf_headers(spark: SparkSession, path_glob: str) -> DataFrame:
     files = binary_files(spark, path_glob, "*.res4").select("path", "content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in CTF_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                hdr = parse_ctf_res4_bytes(bytes(content))
-                if hdr is None:
-                    rows.append({"path": path, "is_readable": False})
-                else:
-                    rows.append({"path": path, "is_readable": True, **hdr})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=CTF_SCHEMA)
+    return map_rows(files, _ctf_header_rows, CTF_SCHEMA)
 
 
 # The companion .meg4 DATA file (same public CTF docs; MNE's
@@ -372,14 +357,25 @@ def parse_meg4_samples(
     return rows
 
 
+def _meg4_rows(
+    path: str, content: bytes, nch: "int | None", ns: "int | None"
+) -> Iterator[dict[str, Any]]:
+    # null header dims (res4 row without usable gSetUp) must classify,
+    # not raise in-task
+    if nch is None or ns is None:
+        return
+    for r in parse_meg4_samples(content, nch, ns):
+        yield {"path": path, **r}
+
+
 def read_ctf_channels(spark: SparkSession, path_glob: str) -> DataFrame:
     """Per-(trial, channel) sample rows from CTF .ds datasets: the .meg4
     data stream decoded with dims from the sibling .res4 header.
 
     Spark-first shape: the header table (one tiny row per .ds) is
     broadcast-joined onto the .meg4 binaries on the .ds directory — no
-    shuffle of sample payloads; the decode is an Arrow-batched mapInPandas
-    over the joined rows. At 100 TB the .meg4 scan partitions by file and
+    shuffle of sample payloads; the decode is an Arrow-batched map over
+    the joined rows. At 100 TB the .meg4 scan partitions by file and
     each task decodes only its own blobs."""
     from pyspark.sql import functions as F
 
@@ -404,37 +400,17 @@ def read_ctf_channels(spark: SparkSession, path_glob: str) -> DataFrame:
         "path", "content", "n_channels", "hdr_n_samples"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in CTF_CHANNEL_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content, nch, ns in zip(
-                pdf["path"], pdf["content"], pdf["n_channels"], pdf["hdr_n_samples"]
-            ):
-                # null/NaN header dims (res4 row without usable gSetUp)
-                # must classify, not raise in-task via int(nan)
-                if pd.isna(nch) or pd.isna(ns):
-                    continue
-                for r in parse_meg4_samples(bytes(content), int(nch), int(ns)):
-                    rows.append({"path": path, **r})
-            yield pd.DataFrame(rows, columns=cols)
+    return map_rows(joined, _meg4_rows, CTF_CHANNEL_SCHEMA)
 
-    return joined.mapInPandas(run, schema=CTF_CHANNEL_SCHEMA)
+
+def _eeglab_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    for r in parse_eeglab_set_bytes(content):
+        yield {"path": path, **r}
 
 
 def read_eeglab_channels(spark: SparkSession, path_glob: str) -> DataFrame:
     files = binary_files(spark, path_glob, "*.set").select("path", "content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in EEGLAB_CHANNEL_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for r in parse_eeglab_set_bytes(bytes(content)):
-                    rows.append({"path": path, **r})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=EEGLAB_CHANNEL_SCHEMA)
+    return map_rows(files, _eeglab_rows, EEGLAB_CHANNEL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -573,6 +549,47 @@ def _bv_channel_stats(
     return [(n_samples, mins[c], maxs[c]) for c in range(n_channels)]
 
 
+def _brainvision_rows(
+    path: str,
+    content: bytes,
+    _dir: str,
+    _eeg_path: "str | None",
+    econtent: "bytes | None",
+    _edir: "str | None",
+    ename: "str | None",
+) -> Iterator[dict[str, Any]]:
+    # all seven columns of the vhdr x sibling-.eeg join below: selecting
+    # the four used ones adds a Project over the join, which measured
+    # ~5% slower on the perfbench BrainVision tree
+    hdr = parse_vhdr_bytes(content)
+    if hdr is None:
+        return
+    if ename is not None and ename != hdr["data_file"]:
+        return  # sibling .eeg not the one this header names
+    stats = (
+        _bv_channel_stats(econtent, hdr["n_channels"], hdr["binary_format"])
+        if econtent is not None
+        else None
+    )
+    for ch in hdr["channels"]:
+        st = (
+            stats[ch["channel_idx"]]
+            if stats and ch["channel_idx"] < len(stats)
+            else (None, None, None)
+        )
+        yield {
+            "path": path,
+            "data_file": hdr["data_file"],
+            "n_channels": hdr["n_channels"],
+            "srate_hz": hdr["srate_hz"],
+            "binary_format": hdr["binary_format"],
+            **{k: ch[k] for k in ("channel_idx", "label", "resolution", "unit")},
+            "n_samples": st[0],
+            "dig_min": st[1],
+            "dig_max": st[2],
+        }
+
+
 def read_brainvision_channels(spark: SparkSession, path_glob: str) -> DataFrame:
     """S7 (BrainVision): scan .vhdr headers, then resolve each header's
     DataFile NEXT TO IT (the .ds-style sibling contract) for per-channel
@@ -593,71 +610,17 @@ def read_brainvision_channels(spark: SparkSession, path_glob: str) -> DataFrame:
         on=F.expr("__dir = __edir"),
         how="left",
     )
+    return map_rows(joined, _brainvision_rows, BRAINVISION_CHANNEL_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in BRAINVISION_CHANNEL_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content, ename, econtent in zip(
-                pdf["path"], pdf["content"], pdf["__ename"], pdf["eeg_content"]
-            ):
-                hdr = parse_vhdr_bytes(bytes(content))
-                if hdr is None:
-                    continue
-                if ename is not None and ename != hdr["data_file"]:
-                    continue  # sibling .eeg not the one this header names
-                stats = (
-                    _bv_channel_stats(
-                        bytes(econtent), hdr["n_channels"], hdr["binary_format"]
-                    )
-                    if econtent is not None
-                    else None
-                )
-                for ch in hdr["channels"]:
-                    st = (
-                        stats[ch["channel_idx"]]
-                        if stats and ch["channel_idx"] < len(stats)
-                        else (None, None, None)
-                    )
-                    rows.append(
-                        {
-                            "path": path,
-                            "data_file": hdr["data_file"],
-                            "n_channels": hdr["n_channels"],
-                            "srate_hz": hdr["srate_hz"],
-                            "binary_format": hdr["binary_format"],
-                            **{
-                                k: ch[k]
-                                for k in (
-                                    "channel_idx",
-                                    "label",
-                                    "resolution",
-                                    "unit",
-                                )
-                            },
-                            "n_samples": st[0],
-                            "dig_min": st[1],
-                            "dig_max": st[2],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
 
-    return joined.mapInPandas(run, schema=BRAINVISION_CHANNEL_SCHEMA)
+def _vmrk_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    for r in parse_vmrk_bytes(content):
+        yield {"path": path, **r}
 
 
 def read_brainvision_markers(spark: SparkSession, path_glob: str) -> DataFrame:
     files = binary_files(spark, path_glob, "*.vmrk").select("path", "content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in BRAINVISION_MARKER_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for r in parse_vmrk_bytes(bytes(content)):
-                    rows.append({"path": path, **r})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=BRAINVISION_MARKER_SCHEMA)
+    return map_rows(files, _vmrk_rows, BRAINVISION_MARKER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -734,16 +697,11 @@ def parse_edf_annotations(content: bytes) -> list[dict[str, Any]]:
     return rows
 
 
+def _annotation_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    for r in parse_edf_annotations(content):
+        yield {"path": path, **r}
+
+
 def read_edf_annotations(spark: SparkSession, path_glob: str) -> DataFrame:
     files = binary_files(spark, path_glob, "*.edf").select("path", "content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in EDF_ANNOTATION_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for r in parse_edf_annotations(bytes(content)):
-                    rows.append({"path": path, **r})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=EDF_ANNOTATION_SCHEMA)
+    return map_rows(files, _annotation_rows, EDF_ANNOTATION_SCHEMA)

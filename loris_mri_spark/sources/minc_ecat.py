@@ -17,10 +17,10 @@ here the bytes are decoded directly.
 
 Spark-first shape: binaryFile scan (`files.binary_files`: one task per
 slot for a small listing, one per 128 MB of file bytes at scale) ->
-Arrow-batched mapInPandas, no temp files, no subprocess — embarrassingly
-parallel at 100 TB. Files that fail to parse become classification rows
-(``is_readable = false``), never job failures (the QC violation-row
-discipline).
+`files.map_rows` over Arrow batches, no temp files, no subprocess —
+embarrassingly parallel at 100 TB. Files that fail to parse become
+classification rows (``is_readable = false``), never job failures (the
+QC violation-row discipline).
 """
 
 from __future__ import annotations
@@ -28,12 +28,10 @@ from __future__ import annotations
 import struct
 from typing import Any, Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from loris_mri_spark.sources.files import binary_files
+from loris_mri_spark.sources.files import binary_files, map_rows
 
 # --------------------------------------------------------------------------
 # MINC1 / NetCDF-classic header parser
@@ -342,32 +340,21 @@ def parse_minc2_bytes(content: bytes) -> list[dict[str, Any]]:
     return rows
 
 
+def _minc_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    parsed = parse_minc1_bytes(content) or parse_minc2_bytes(content)
+    if not parsed:
+        yield {"path": path, "is_readable": False}
+    for r in parsed:
+        yield {"path": path, "is_readable": True, **r}
+
+
 def read_minc_headers(spark: SparkSession, path_glob: str) -> DataFrame:
     """S5: per-file MINC header explosion -> one row per
     (variable, attribute). MINC1 (NetCDF classic) and MINC2 (HDF5) both
     parse natively; anything else classifies as ``is_readable=false``
     instead of failing the scan."""
     files = binary_files(spark, path_glob, "*.mnc").select("path", "content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in MINC_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                raw = bytes(content)
-                parsed = parse_minc1_bytes(raw) or parse_minc2_bytes(raw)
-                if not parsed:
-                    rows.append(
-                        {"path": path, "is_readable": False, "variable": None,
-                         "attribute": None, "value_str": None,
-                         "value_num": None}
-                    )
-                    continue
-                for r in parsed:
-                    rows.append({"path": path, "is_readable": True, **r})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=MINC_SCHEMA)
+    return map_rows(files, _minc_rows, MINC_SCHEMA)
 
 
 def minc_field(df: DataFrame, variable: str, attribute: str, out: str) -> DataFrame:
@@ -474,47 +461,33 @@ def parse_ecat7_directory(content: bytes) -> list[dict[str, Any]]:
     return out
 
 
+def _ecat_header_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    hdr = parse_ecat7_main_header(content)
+    if hdr is None:
+        yield {"path": path, "is_readable": False}
+    else:
+        yield {"path": path, "is_readable": True,
+               "n_matrices": len(parse_ecat7_directory(content)), **hdr}
+
+
 def read_ecat_headers(spark: SparkSession, path_glob: str) -> DataFrame:
     """S6: ECAT7 main headers, one row per .v file."""
     files = binary_files(spark, path_glob, "*.v").select("path", "content")
+    return map_rows(files, _ecat_header_rows, ECAT_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in ECAT_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                b = bytes(content)
-                hdr = parse_ecat7_main_header(b)
-                if hdr is None:
-                    rows.append({"path": path, "is_readable": False})
-                    continue
-                rows.append(
-                    {"path": path, "is_readable": True,
-                     "n_matrices": len(parse_ecat7_directory(b)), **hdr}
-                )
-            yield pd.DataFrame(rows, columns=cols)
 
-    return files.mapInPandas(run, schema=ECAT_SCHEMA)
+def _ecat_matrix_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    if parse_ecat7_main_header(content) is None:
+        return
+    for r in parse_ecat7_directory(content):
+        yield {"path": path, **r}
 
 
 def read_ecat_matrices(spark: SparkSession, path_glob: str) -> DataFrame:
     """S6: directory + subheader explosion, one row per stored matrix
     (frame/gate/bed) — the per-frame surface ecat2minc conversion walks."""
     files = binary_files(spark, path_glob, "*.v").select("path", "content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in ECAT_MATRIX_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                b = bytes(content)
-                if parse_ecat7_main_header(b) is None:
-                    continue
-                for r in parse_ecat7_directory(b):
-                    rows.append({"path": path, **r})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=ECAT_MATRIX_SCHEMA)
+    return map_rows(files, _ecat_matrix_rows, ECAT_MATRIX_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -555,18 +528,13 @@ def parse_matlab_sidecar(content: bytes) -> list[dict[str, Any]]:
     return rows
 
 
+def _sidecar_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    for r in parse_matlab_sidecar(content):
+        yield {"path": path, **r}
+
+
 def read_ecat_sidecars(spark: SparkSession, path_glob: str) -> DataFrame:
     """S6: Matlab sidecar scan alongside the .v files — one row per
     (file, key) study parameter."""
     files = binary_files(spark, path_glob, "*.m").select("path", "content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in MATLAB_SIDECAR_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for r in parse_matlab_sidecar(bytes(content)):
-                    rows.append({"path": path, **r})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=MATLAB_SIDECAR_SCHEMA)
+    return map_rows(files, _sidecar_rows, MATLAB_SIDECAR_SCHEMA)

@@ -7,9 +7,9 @@ struct, so the engine parses it with stdlib `struct` — no nibabel needed
 for the header surface; gzipped files are handled transparently (gzip
 magic sniff).
 
-Spark-first shape: binaryFile scan + Arrow-batched mapInPandas, same as
-the DICOM source; output is the narrow spatial-parameter table the
-insertion pipeline joins on.
+Spark-first shape: binaryFile scan + `files.map_rows`, same as the DICOM
+source; output is the narrow spatial-parameter table the insertion
+pipeline joins on.
 """
 
 from __future__ import annotations
@@ -20,11 +20,9 @@ import math
 import struct
 from typing import Any, Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 
-from loris_mri_spark.sources.files import binary_files
+from loris_mri_spark.sources.files import binary_files, map_rows
 
 NIFTI_SCHEMA = (
     "path string, is_nifti boolean, ndim int, xspace int, yspace int, "
@@ -64,23 +62,13 @@ def parse_nifti_bytes(content: bytes) -> dict[str, Any]:
     }
 
 
-def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [c.split(" ")[0] for c in NIFTI_SCHEMA.split(", ")]
-    for pdf in batches:
-        rows = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            rows.append({"path": path, **parse_nifti_bytes(bytes(content))})
-        out = pd.DataFrame(rows)
-        for c in ("ndim", "xspace", "yspace", "zspace", "time", "datatype"):
-            out[c] = out.get(c).astype("Int32") if c in out else None
-        for c in ("xstep", "ystep", "zstep"):
-            out[c] = out.get(c).astype("float64") if c in out else None
-        yield out[cols]
+def _header_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    yield {"path": path, **parse_nifti_bytes(content)}
 
 
 def read_nifti_headers(spark: SparkSession, path_glob: str) -> DataFrame:
     files = binary_files(spark, path_glob, "*.nii*").select("path", "content")
-    return files.mapInPandas(_parse_partition, schema=NIFTI_SCHEMA)
+    return map_rows(files, _header_rows, NIFTI_SCHEMA)
 
 
 VOXEL_STATS_SCHEMA = (
@@ -215,29 +203,17 @@ def nifti_voxel_stats(content: bytes) -> "dict[str, Any] | None":
     }
 
 
+def _voxel_stats_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    yield {"path": path, **(nifti_voxel_stats(content) or {"is_nifti": False})}
+
+
 def read_nifti_voxel_stats(spark: SparkSession, path_glob: str) -> DataFrame:
     """binaryFile scan -> per-volume exact voxel moments + SNR estimate.
     Partitioning by file is the right unit: each volume's stats are one
     independent Arrow-batched task, so a million-volume corpus fans out
     across executors with no shuffle at all."""
-    cols = [c.split(" ")[0] for c in VOXEL_STATS_SCHEMA.split(", ")]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                st = nifti_voxel_stats(bytes(content))
-                if st is None:
-                    rows.append({"path": path, "is_nifti": False})
-                else:
-                    rows.append({"path": path, **st})
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("n_vox", "n_read", "vmin", "vmax", "vsum", "vsumsq"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
     files = binary_files(spark, path_glob, "*.nii*").select("path", "content")
-    return files.mapInPandas(run, schema=VOXEL_STATS_SCHEMA)
+    return map_rows(files, _voxel_stats_rows, VOXEL_STATS_SCHEMA)
 
 
 COG_SCHEMA = (
@@ -323,30 +299,16 @@ def nifti_volume_cog(content: bytes) -> "dict[str, Any] | None":
     }
 
 
+def _cog_rows(path: str, content: bytes) -> Iterator[dict[str, Any]]:
+    yield {"path": path, **(nifti_volume_cog(content) or {"is_nifti": False})}
+
+
 def read_nifti_cog(spark: SparkSession, path_glob: str) -> DataFrame:
     """binaryFile scan -> per-volume exact center of gravity (one
     independent Arrow-batched task per file; no shuffle — same fan-out
     contract as read_nifti_voxel_stats)."""
-    cols = [c.split(" ")[0] for c in COG_SCHEMA.split(", ")]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                st = nifti_volume_cog(bytes(content))
-                if st is None:
-                    rows.append({"path": path, "is_nifti": False})
-                else:
-                    rows.append({"path": path, **st})
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("nx", "ny", "nz"):
-                out[c] = out[c].astype("Int32")
-            for c in ("frame_sum", "cog_num_x", "cog_num_y", "cog_num_z"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
     files = (
         binary_files(spark, path_glob, recursive=False)
         .select("path", "content")
     )
-    return files.mapInPandas(run, schema=COG_SCHEMA)
+    return map_rows(files, _cog_rows, COG_SCHEMA)

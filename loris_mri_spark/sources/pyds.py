@@ -57,7 +57,7 @@ from loris_mri_spark.sources.nifti import NIFTI_SCHEMA, parse_nifti_bytes
 FORMAT_NAME = "loris_headers"
 
 # kind -> (DDL schema, bytes-parser). The schemas/parsers are the exact
-# ones the mapInPandas scans use, so the two paths agree row-for-row.
+# ones the binaryFile scans use, so the two paths agree row-for-row.
 _KINDS: dict[str, tuple[str, Any]] = {
     "dicom": (DICOM_SCHEMA, parse_dicom_bytes),
     "nifti": (NIFTI_SCHEMA, parse_nifti_bytes),

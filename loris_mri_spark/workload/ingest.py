@@ -11,6 +11,7 @@ the expected rows are fixed by the committed fixtures).
 
 from __future__ import annotations
 
+import hashlib
 import os
 from pathlib import Path
 
@@ -19,7 +20,8 @@ from pyspark.sql import functions as F
 
 from loris_mri_spark.sources.archive import read_tar_members
 from loris_mri_spark.sources.bids import read_events_tsv, read_participants_tsv
-from loris_mri_spark.sources.dicom import _parse_partition, scan_dicom_dir
+from loris_mri_spark.sources.dicom import DICOM_SCHEMA, _header_rows, scan_dicom_dir
+from loris_mri_spark.sources.files import map_rows
 from loris_mri_spark.workload import query
 
 FIXTURES = str(Path(__file__).resolve().parents[2] / "tests" / "fixtures")
@@ -229,14 +231,11 @@ def s3_s1_composed_archive_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary, all within one DataFrame DAG (the reference's extract-then-
     loop becomes scan -> flatMap -> parse -> groupBy; no temp files)."""
     members = read_tar_members(spark, f"{FIXTURES}/archive/study.tar.gz")
-    hdrs = members.select(
-        F.col("member").alias("path"), F.col("content")
-    ).mapInPandas(_parse_partition, schema=(
-        "path string, is_dicom boolean, modality string, patient_name string, "
-        "study_uid string, series_uid string, series_number int, "
-        "instance_number int, series_description string, "
-        "echo_time double, repetition_time double"
-    ))
+    hdrs = map_rows(
+        members.select(F.col("member").alias("path"), F.col("content")),
+        _header_rows,
+        DICOM_SCHEMA,
+    )
     return (
         hdrs.filter(F.col("is_dicom"))
         .groupBy(
@@ -662,7 +661,7 @@ def s2_enhanced_tag_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s1_headers_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The S1 series collapse read through the REGISTERED Spark-4 Python
     Data Source (sources/pyds.py, format 'loris_headers') instead of the
-    binaryFile+mapInPandas scan — proving the parsers are a first-class
+    binaryFile + Arrow-map scan — proving the parsers are a first-class
     `spark.read.format(...)` source with path-filter pushdown (pruning
     happens at file-listing time, before any byte is read). Same golden
     oracle as s1_dicom_series_summary: the two paths agree row-for-row."""
@@ -713,7 +712,7 @@ def s7_bdf_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     dig range deliberately exceeds int16 to prove the 24-bit path).
     Reference accepts .bdf alongside .edf (eeg/main.py:249). Golden
     oracle: byte-stable fixture."""
-    from loris_mri_spark.sources.eeg import EDF_CHANNEL_SCHEMA, _parse_partition
+    from loris_mri_spark.sources.eeg import EDF_CHANNEL_SCHEMA, _edf_rows
 
     files = (
         spark.read.format("binaryFile")
@@ -722,7 +721,7 @@ def s7_bdf_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(f"{FIXTURES}/eeg")
         .select("path", "content")
     )
-    ch = files.mapInPandas(_parse_partition, schema=EDF_CHANNEL_SCHEMA)
+    ch = map_rows(files, _edf_rows, EDF_CHANNEL_SCHEMA)
     return ch.select(
         "channel_idx", "label", "phys_dim", "n_records",
         "samples_per_record", "n_samples", "dig_min", "dig_max",
@@ -890,36 +889,24 @@ def s1_dicom_encapsulated_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "frag_index int, bot_offset long, frag_size long, frag_md5 string"
     )
 
-    def run(batches):
-        import hashlib
-        import os as _os
+    def fragments(path, content):
+        r = parse_encapsulated_frames(content)
+        if r is None:
+            return
+        for k, (_off, ln, data) in enumerate(r["fragments"]):
+            yield {
+                "file": os.path.basename(path),
+                "transfer_syntax": r["transfer_syntax"],
+                "n_fragments": len(r["fragments"]),
+                "frag_index": k,
+                "bot_offset": r["bot_offsets"][k]
+                if k < len(r["bot_offsets"])
+                else None,
+                "frag_size": ln,
+                "frag_md5": hashlib.md5(data).hexdigest(),
+            }
 
-        import pandas as pd
-
-        cols = [c.split(" ")[0] for c in schema.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                r = parse_encapsulated_frames(bytes(content))
-                if r is None:
-                    continue
-                for k, (_off, ln, data) in enumerate(r["fragments"]):
-                    rows.append(
-                        {
-                            "file": _os.path.basename(path),
-                            "transfer_syntax": r["transfer_syntax"],
-                            "n_fragments": len(r["fragments"]),
-                            "frag_index": k,
-                            "bot_offset": r["bot_offsets"][k]
-                            if k < len(r["bot_offsets"])
-                            else None,
-                            "frag_size": ln,
-                            "frag_md5": hashlib.md5(data).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=schema)
+    return map_rows(files, fragments, schema)
 
 
 def _rle_oracle() -> str:
@@ -976,41 +963,27 @@ def s1_dicom_rle_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_px long, px_sum long, px_md5 string"
     )
 
-    def run(batches):
-        import hashlib
-        import os as _os
+    def frames(path, content):
+        r = parse_encapsulated_frames(content)
+        if r is None or r["transfer_syntax"] != "1.2.840.10008.1.2.5":
+            return
+        n_expected = (r.get("rows") or 0) * (r.get("cols") or 0)
+        for f, (_o, _n, data) in enumerate(r["fragments"]):
+            px = decode_rle_frame(data)
+            if px is None:
+                continue
+            px = px[:n_expected] if n_expected else px
+            yield {
+                "file": os.path.basename(path),
+                "frame_index": f,
+                "rows": r.get("rows"),
+                "cols": r.get("cols"),
+                "n_px": len(px),
+                "px_sum": sum(px),
+                "px_md5": hashlib.md5(bytes(v & 0xFF for v in px)).hexdigest(),
+            }
 
-        import pandas as pd
-
-        cols_ = [c.split(" ")[0] for c in schema.split(", ")]
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                r = parse_encapsulated_frames(bytes(content))
-                if r is None or r["transfer_syntax"] != "1.2.840.10008.1.2.5":
-                    continue
-                n_expected = (r.get("rows") or 0) * (r.get("cols") or 0)
-                for f, (_o, _n, data) in enumerate(r["fragments"]):
-                    px = decode_rle_frame(data)
-                    if px is None:
-                        continue
-                    px = px[:n_expected] if n_expected else px
-                    out.append(
-                        {
-                            "file": _os.path.basename(path),
-                            "frame_index": f,
-                            "rows": r.get("rows"),
-                            "cols": r.get("cols"),
-                            "n_px": len(px),
-                            "px_sum": sum(px),
-                            "px_md5": hashlib.md5(
-                                bytes(v & 0xFF for v in px)
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=cols_)
-
-    return files.mapInPandas(run, schema=schema)
+    return map_rows(files, frames, schema)
 
 
 def _jpeg_frames_oracle() -> str:
@@ -1071,42 +1044,28 @@ def s1_dicom_jpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "px_sum long, px_md5 string"
     )
 
-    def run(batches):
-        import hashlib
-        import os as _os
+    def frames(path, content):
+        r = parse_encapsulated_frames(content)
+        if r is None or r["transfer_syntax"] != "1.2.840.10008.1.2.4.50":
+            return
+        for f, (_o, _n, data) in enumerate(r["fragments"]):
+            img = decode_jpeg_baseline(data)
+            if img is None:
+                continue
+            if r.get("rows") and img.shape[0] != r["rows"]:
+                continue  # tag/codestream mismatch: classify out
+            if r.get("cols") and img.shape[1] != r["cols"]:
+                continue
+            yield {
+                "file": os.path.basename(path),
+                "frame_index": f,
+                "rows": img.shape[0],
+                "cols": img.shape[1],
+                "px_sum": int(img.astype("int64").sum()),
+                "px_md5": hashlib.md5(img.tobytes()).hexdigest(),
+            }
 
-        import pandas as pd
-
-        cols_ = [c.split(" ")[0] for c in schema.split(", ")]
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                r = parse_encapsulated_frames(bytes(content))
-                if r is None or r["transfer_syntax"] != (
-                    "1.2.840.10008.1.2.4.50"
-                ):
-                    continue
-                for f, (_o, _n, data) in enumerate(r["fragments"]):
-                    img = decode_jpeg_baseline(data)
-                    if img is None:
-                        continue
-                    if r.get("rows") and img.shape[0] != r["rows"]:
-                        continue  # tag/codestream mismatch: classify out
-                    if r.get("cols") and img.shape[1] != r["cols"]:
-                        continue
-                    out.append(
-                        {
-                            "file": _os.path.basename(path),
-                            "frame_index": f,
-                            "rows": img.shape[0],
-                            "cols": img.shape[1],
-                            "px_sum": int(img.astype("int64").sum()),
-                            "px_md5": hashlib.md5(img.tobytes()).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=cols_)
-
-    return files.mapInPandas(run, schema=schema)
+    return map_rows(files, frames, schema)
 
 
 @query("x3b_udtf_tar_members", oracle=_member_values_sql())

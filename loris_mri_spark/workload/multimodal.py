@@ -6,6 +6,7 @@ binary path exactly)."""
 
 from __future__ import annotations
 
+import hashlib
 import os as _osmod
 
 from pyspark.sql import DataFrame, SparkSession
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 
 from loris_mri_spark.catalog import load_table
 from loris_mri_spark.operators.media import extract_features, sample_frames
+from loris_mri_spark.sources.files import map_rows
 from loris_mri_spark.workload import query
 
 
@@ -68,7 +70,7 @@ def mm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over the binary stream (every 4th 64-byte frame,
-    per-frame checksum) via mapInPandas — the video-column access
+    per-frame checksum) in an Arrow map — the video-column access
     pattern; the oracle frames the ASCII text identically."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("content")
@@ -266,30 +268,19 @@ def mm_decode_jpeg_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schema = "file string, height int, width int, px_sum long, px_md5 string"
 
-    def run(batches):
-        import hashlib
+    def decode(path, content):
+        img = decode_jpeg_baseline(content)
+        if img is None:
+            return
+        yield {
+            "file": _os.path.basename(path),
+            "height": img.shape[0],
+            "width": img.shape[1],
+            "px_sum": int(img.astype("int64").sum()),
+            "px_md5": hashlib.md5(img.tobytes()).hexdigest(),
+        }
 
-        import pandas as pd
-
-        cols = [c.split(" ")[0] for c in schema.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                img = decode_jpeg_baseline(bytes(content))
-                if img is None:
-                    continue
-                rows.append(
-                    {
-                        "file": _os.path.basename(path),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "px_sum": int(img.astype("int64").sum()),
-                        "px_md5": hashlib.md5(img.tobytes()).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=schema)
+    return map_rows(files, decode, schema)
 
 
 def _mjpeg_oracle() -> str:
@@ -348,36 +339,25 @@ def mm_video_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_frames_declared int, px_sum long, px_md5 string"
     )
 
-    def run(batches):
-        import hashlib
+    def decode(path, content):
+        avi = parse_avi_mjpeg(content)
+        if avi is None:
+            return
+        for f, jpg in enumerate(avi["frames"]):
+            img = decode_jpeg_baseline(jpg)
+            if img is None:
+                continue
+            yield {
+                "file": _os.path.basename(path),
+                "frame_idx": f,
+                "width": img.shape[1],
+                "height": img.shape[0],
+                "n_frames_declared": avi["n_frames_declared"],
+                "px_sum": int(img.astype("int64").sum()),
+                "px_md5": hashlib.md5(img.tobytes()).hexdigest(),
+            }
 
-        import pandas as pd
-
-        cols = [c.split(" ")[0] for c in schema.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                avi = parse_avi_mjpeg(bytes(content))
-                if avi is None:
-                    continue
-                for f, jpg in enumerate(avi["frames"]):
-                    img = decode_jpeg_baseline(jpg)
-                    if img is None:
-                        continue
-                    rows.append(
-                        {
-                            "file": _os.path.basename(path),
-                            "frame_idx": f,
-                            "width": img.shape[1],
-                            "height": img.shape[0],
-                            "n_frames_declared": avi["n_frames_declared"],
-                            "px_sum": int(img.astype("int64").sum()),
-                            "px_md5": hashlib.md5(img.tobytes()).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=schema)
+    return map_rows(files, decode, schema)
 
 
 def _jpeg_color_oracle() -> str:
@@ -438,33 +418,22 @@ def mm_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cr_sum long, px_md5 string"
     )
 
-    def run(batches):
-        import hashlib
+    def decode(path, content):
+        img = decode_jpeg_baseline(content)
+        if img is None or img.ndim != 3:
+            return
+        s = img.astype("int64").sum(axis=(0, 1))
+        yield {
+            "file": _os.path.basename(path),
+            "height": img.shape[0],
+            "width": img.shape[1],
+            "y_sum": int(s[0]),
+            "cb_sum": int(s[1]),
+            "cr_sum": int(s[2]),
+            "px_md5": hashlib.md5(img.tobytes()).hexdigest(),
+        }
 
-        import pandas as pd
-
-        cols = [c.split(" ")[0] for c in schema.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                img = decode_jpeg_baseline(bytes(content))
-                if img is None or img.ndim != 3:
-                    continue
-                s = img.astype("int64").sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "file": _os.path.basename(path),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "y_sum": int(s[0]),
-                        "cb_sum": int(s[1]),
-                        "cr_sum": int(s[2]),
-                        "px_md5": hashlib.md5(img.tobytes()).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, schema=schema)
+    return map_rows(files, decode, schema)
 
 
 @query(

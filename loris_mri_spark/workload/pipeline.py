@@ -2291,10 +2291,11 @@ def pipeline_eeg_bids_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from loris_mri_spark.sources.eeg import (
         EDF_CHANNEL_SCHEMA,
-        _parse_partition,
+        _edf_rows,
         read_edf_channels,
         read_eeglab_channels,
     )
+    from loris_mri_spark.sources.files import map_rows
 
     fdir = os.environ.get("LORIS_BIDS_EEG_FIXTURES") or _bids_eeg_dir()
     s = F.lit
@@ -2440,9 +2441,8 @@ def pipeline_eeg_bids_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_edf_channels(spark, fdir)
         .select("path", "channel_idx", "label", "n_samples")
         .unionByName(
-            bdf_files.mapInPandas(
-                _parse_partition, schema=EDF_CHANNEL_SCHEMA
-            ).select("path", "channel_idx", "label", "n_samples")
+            map_rows(bdf_files, _edf_rows, EDF_CHANNEL_SCHEMA)
+            .select("path", "channel_idx", "label", "n_samples")
         )
         .unionByName(
             read_eeglab_channels(spark, fdir).select(

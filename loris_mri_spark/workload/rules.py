@@ -33,7 +33,7 @@ from loris_mri_spark.operators.protocol_match import (
     identify_protocol,
 )
 from loris_mri_spark.operators.qc_checks import melt_headers, run_qc_checks
-from loris_mri_spark.workload import query
+from loris_mri_spark.workload import query, shared_df
 
 # ---------------------------------------------------------------------------
 # The inline rule table (mirrors mri_protocol, FIXTURES.md): NULL bound =
@@ -143,29 +143,12 @@ def _rules_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(table, schema=_RULES_SCHEMA)
 
 
-# Shared-intermediate cache for the seven queries that start from the same
-# match (the three j7 queries and four pipeline_* queries).
-# Opt-in via spark.loris.sharedCache=true (bench.py sets it): a cached DF
-# changes the physical plan (InMemoryTableScan), so correctness/plan runs
-# keep the pure single-scan plan. The match is a codegen'd projection, so
-# what the cache saves each consumer is the lineitem scan plus that
-# projection; at sf0.1 on local[4] the seven consumers' summed warm time
-# was ~6 s with it and ~9.4 s without.
-_J7_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _identified_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    use_cache = (
-        spark.conf.get("spark.loris.sharedCache", "false").lower() == "true"
+    # Seven queries start from this match; sharing it cut their summed
+    # warm time from ~9.4 s to ~6 s (sf0.1, local[4]).
+    return shared_df(
+        spark, ("j7", sf_dir), lambda: _identify_lineitems_uncached(spark, sf_dir)
     )
-    key = (id(spark), sf_dir)
-    if use_cache and key in _J7_CACHE:
-        return _J7_CACHE[key]
-    out = _identify_lineitems_uncached(spark, sf_dir)
-    if use_cache:
-        out = out.persist()
-        _J7_CACHE[key] = out
-    return out
 
 
 def _identify_lineitems_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:

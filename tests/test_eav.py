@@ -166,3 +166,39 @@ def test_nifti_voxel_stats_hardening():
     s, q = _exact_moments(v)
     assert s == 3 * (2**31 - 1)
     assert q == 3 * (2**31 - 1) ** 2  # > 2^63: wraps under np.dot
+
+
+def test_voxel_stats_exact_past_2_53_beside_a_classified_file(spark, tmp_path):
+    """A batch that mixes a classified (non-NIfTI) row with an int32
+    volume whose vsumsq is past 2**53 still yields the exact moments: the
+    classified row lacks the stats keys, and a float64 column built
+    across the two would drop vsumsq's low bits. coalesce(1) puts both
+    files in one batch (read_nifti_voxel_stats gives each tiny file its
+    own task)."""
+    import os
+    import struct
+
+    from loris_mri_spark.sources.files import map_rows
+    from loris_mri_spark.sources.nifti import (
+        VOXEL_STATS_SCHEMA,
+        _voxel_stats_rows,
+    )
+
+    v = 2**31 - 1
+    (tmp_path / "a.nii").write_bytes(b"not a nifti")
+    (tmp_path / "b.nii").write_bytes(
+        _mk_nifti((1,), struct.pack("<i", v), datatype=8)
+    )
+    files = (
+        spark.read.format("binaryFile").load(str(tmp_path))
+        .select("path", "content").coalesce(1)
+    )
+    rows = {
+        os.path.basename(r["path"]): r
+        for r in map_rows(files, _voxel_stats_rows, VOXEL_STATS_SCHEMA).collect()
+    }
+    assert rows["a.nii"]["is_nifti"] is False
+    assert rows["a.nii"]["vsumsq"] is None
+    assert v * v > 2**53
+    assert rows["b.nii"]["vsumsq"] == v * v == 4611686014132420609
+    assert rows["b.nii"]["vsum"] == rows["b.nii"]["vmax"] == v

@@ -165,9 +165,7 @@ def test_tar_member_size_cap_inventories_without_content():
     import io
     import tarfile
 
-    import pandas as pd
-
-    from loris_mri_spark.sources.archive import _explode_partition
+    from loris_mri_spark.sources.archive import _member_rows
 
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w") as t:
@@ -186,9 +184,7 @@ def test_tar_member_size_cap_inventories_without_content():
                 return b"\0" * n
 
         t.addfile(bomb, _Zeros())
-    pdf = pd.DataFrame({"path": ["a.tar"], "content": [buf.getvalue()]})
-    out = pd.concat(list(_explode_partition(iter([pdf]))))
-    by = {r.member: r for r in out.itertuples()}
-    assert bytes(by["ok.txt"].content) == b"ok"
-    assert by["bomb.bin"].size == 600 * 1024 * 1024
-    assert by["bomb.bin"].content is None
+    by = {r["member"]: r for r in _member_rows("a.tar", buf.getvalue())}
+    assert by["ok.txt"]["content"] == b"ok"
+    assert by["bomb.bin"]["size"] == 600 * 1024 * 1024
+    assert by["bomb.bin"].get("content") is None

@@ -1,7 +1,7 @@
 """Property-based robustness: every binary header parser must CLASSIFY
 (return None/[]/partial rows), never raise, on arbitrary garbage and on
 arbitrary truncations/mutations of valid fixtures — a raise inside
-mapInPandas kills the whole scan task (the QC violation-row contract)."""
+a parse task kills the whole scan (the QC violation-row contract)."""
 
 from __future__ import annotations
 

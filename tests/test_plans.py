@@ -52,6 +52,27 @@ def test_no_lazy_local_checkpoint_in_package():
     assert offenders == [], offenders
 
 
+def test_file_parsers_emit_rows_through_map_rows():
+    """How a Python parser's rows cross into Spark (batch loop, column
+    order, missing keys, integer types) is decided once, in
+    sources.files.map_rows: no sources/ module calls mapInPandas, and
+    the media operators and multimodal queries keep no batch loop of
+    their own."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "loris_mri_spark"
+    offenders = [
+        str(p) for p in (pkg / "sources").rglob("*.py")
+        if ".mapInPandas(" in p.read_text()
+    ] + [
+        str(p)
+        for p in (pkg / "operators" / "media.py",
+                  pkg / "workload" / "multimodal.py")
+        if "for pdf in batches" in p.read_text()
+    ]
+    assert offenders == [], offenders
+
+
 def test_winnow_pairs_single_scan_and_exchange_reuse(spark, sf_dir):
     """The capped-jaccard anchors must actually fire: the fingerprint
     pipeline (one parquet scan) evaluates ONCE and every other consumer
@@ -444,8 +465,9 @@ def test_eeg_bids_ingest_broadcast_only_joins(spark, sf_dir):
 def test_mri_bids_import_plan_shape(spark, sf_dir):
     """The MRI BIDS capstone: broadcast-only joins (participants and the
     inserted-file list are the dims; a SortMergeJoin would shuffle the
-    acquisition listing), no cartesian, and exactly ONE live MapInPandas
-    stage (the S4 header parse) — the chunked blake2b passes are
+    acquisition listing), no cartesian, and exactly ONE live Python map
+    stage (the S4 header parse, a MapInArrow through
+    sources.files.map_rows) — the chunked blake2b passes are
     anchored behind EAGER local checkpoints (eager=False is banned
     repo-wide, see test_no_lazy_local_checkpoint_in_package) so the ~10
     union branches read the rows-sized hash table instead of re-hashing
@@ -456,7 +478,7 @@ def test_mri_bids_import_plan_shape(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1 and plan.count("MapInPandas") == 0
     assert "Scan ExistingRDD" in plan  # the checkpoint anchors
 
 

@@ -1,5 +1,5 @@
 """The Spark-4 Python Data Source (sources/pyds.py) must agree row-for-row
-with the binaryFile+mapInPandas scans, prune files at listing time under
+with the binaryFile scans, prune files at listing time under
 filter pushdown, and do exactly-once incremental ingest as a stream."""
 
 from __future__ import annotations

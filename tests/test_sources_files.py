@@ -90,3 +90,27 @@ def test_scan_dicom_dir_equals_pure_python_parse(spark):
         .collect()
     ]
     assert sorted(got) == sorted(expected)
+
+
+def test_map_rows_nan_and_missing_keys_are_null(spark):
+    """``map_rows`` builds each column at its schema type: a Python or
+    numpy float NaN in a double column is NULL, a key a row lacks is
+    NULL in every column type, and a bigint past 2**53 stays exact."""
+    import numpy as np
+
+    from loris_mri_spark.sources.files import map_rows
+
+    def rows(k):
+        yield {"k": k, "d": float("nan") if k == 0 else np.float64("nan")}
+        yield {"k": k, "d": 0.5, "i": 7, "b": 2**62 + 1, "f": True, "a": [1.5]}
+        yield {"k": k}
+
+    ddl = "k int, d double, i int, b bigint, f boolean, a array<double>"
+    got = map_rows(spark.createDataFrame([(0,), (1,)], "k int"), rows, ddl)
+    full = (0.5, 7, 2**62 + 1, True, [1.5])
+    nulls = (None,) * 5
+    expected = sorted(
+        [(k, *nulls) for k in (0, 1)] * 2 + [(k, *full) for k in (0, 1)],
+        key=repr,
+    )
+    assert sorted((tuple(r) for r in got.collect()), key=repr) == expected
