@@ -76,8 +76,10 @@ def _wrap(fn: "QueryFn") -> "QueryFn":
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: protocol identification rollup at sf0.001 — the reference's
-    single most important computation (MRI.pm:307-526) as one broadcast
-    non-equi join + priority window over the scan table."""
+    single most important computation (MRI.pm:307-526) as one codegen'd
+    ``CASE WHEN`` chain over the scan table (first true branch = first
+    matching rule; no join and no shuffle in the match), then a count per
+    scan type."""
     _ensure_pkg_shipped(spark)
     return workload.QUERIES["j7_scan_type_rollup"](spark, "/root/testdata/sf0.001")
 

@@ -27,6 +27,15 @@ _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+# Run shape (see the comments at each use): a seeded-shuffled query
+# order, a fresh SparkContext every RECYCLE_EVERY queries, and an in-run
+# adjudication bracket for at most ADJUDICATE_CAP regression flags within
+# ADJUDICATE_BUDGET_SEC of wall clock.
+RUN_ORDER_SEED = 12
+RECYCLE_EVERY = 60
+ADJUDICATE_CAP = 12
+ADJUDICATE_BUDGET_SEC = 300.0
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -155,11 +164,11 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
     calib_jvm_hot = round(time.perf_counter() - t0, 3)
 
-    # Two runs per query: the first pays one-time whole-stage-codegen
-    # compilation (seconds for the big expression trees — session cost,
-    # amortized to zero on a long-lived cluster); the second measures the
-    # PLAN. Reported per-query time = steady state; cold totals are kept
-    # alongside for transparency.
+    # One cold run per query, then three warm runs: the cold run pays
+    # one-time whole-stage-codegen compilation (seconds for the big
+    # expression trees — session cost, amortized to zero on a long-lived
+    # cluster); the warm runs measure the PLAN. Reported per-query time =
+    # the warm median; cold totals are kept alongside for transparency.
     import gc
     import statistics
 
@@ -223,30 +232,6 @@ def main() -> None:
             max(host_ratio * now_calib / calib_jvm_hot, 1 / 3), 3.0
         )
 
-    # Streaming / micro-batch / subprocess-bound queries are dominated by
-    # fixed per-trigger overhead, not plan cost, so their sub-second warm
-    # times are the bench's noisiest population (r6 flagged three
-    # code-unchanged ones up to 5.6x; r7's whole flag set — t4, t5d, x3b —
-    # was again exactly this class). Policy since r8: any such query with
-    # a sub-1s first warm is measured at median-of-3 BY DEFAULT, not only
-    # when it would already flag.
-    def _timing_sensitive(name: str) -> bool:
-        return (
-            (name[:1] == "t" and name[1:2].isdigit())
-            or name.startswith("x3b_")
-            or name.startswith("s16_")
-        )
-
-    # Median-of-3 warm for EVERY query is the DEFAULT since r11 (~3x
-    # bench runtime; set LORIS_BENCH_ALL_MEDIAN3=0 for a quick single
-    # shot). The r10 recalibration data showed this host's throttle is
-    # BURSTY at sub-query timescales — a calib probe run seconds after a
-    # 2x-slow query measures FAST — so a uniform host ratio cannot
-    # normalize it; only per-query medians can damp it. The r10 driver
-    # artifact proved the point: its single-shot run emitted 36
-    # regression flags, every one adjudicated as throttle noise.
-    all_median3 = os.environ.get("LORIS_BENCH_ALL_MEDIAN3", "1") != "0"
-
     # SEEDED-SHUFFLED run order (r11 VERDICT item 6): alphabetical order
     # ran the t*-x* families last every round, so session aging (GC
     # pressure, code-cache churn — Finding 8) landed on the SAME queries
@@ -254,14 +239,11 @@ def main() -> None:
     # late-alphabet regression flags that standalone brackets adjudicated
     # as noise. A deterministic shuffle (fixed seed, stable across hosts
     # and rounds so run-to-run comparisons stay query-aligned) spreads
-    # the tail across the alphabet instead; set LORIS_BENCH_SEED=-1 to
-    # restore alphabetical order.
+    # the tail across the alphabet instead.
     import random
 
     names = sorted(workload.QUERIES)
-    seed = int(os.environ.get("LORIS_BENCH_SEED", "12"))
-    if seed >= 0:
-        random.Random(seed).shuffle(names)
+    random.Random(RUN_ORDER_SEED).shuffle(names)
 
     # SESSION RECYCLING (r11 VERDICT item 6, second lever): even with
     # 16g + periodic GC + per-query medians, the r12 shuffled run still
@@ -272,15 +254,13 @@ def main() -> None:
     # shared-cache footprint; the first query after a recycle re-pays
     # shared-intermediate builds in its COLD pass (absorbed by design —
     # warm medians run after it), and warm_session() re-pays first-touch
-    # costs outside any timed region. 0 disables.
-    recycle_every = int(os.environ.get("LORIS_BENCH_RECYCLE", "60"))
+    # costs outside any timed region.
     recycles: list[int] = []
 
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
-    remeasured: list[str] = []
     for qi, name in enumerate(names):
-        if recycle_every and qi and qi % recycle_every == 0:
+        if qi and qi % RECYCLE_EVERY == 0:
             spark.stop()
             spark = make_session()
             warm_session(spark)
@@ -295,35 +275,22 @@ def main() -> None:
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             cold[name] = round(time.perf_counter() - t0, 3)
-            t1 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            warm = round(time.perf_counter() - t1, 3)
-            # De-flake: this container's CPU throttles intermittently (the
-            # fixed python-loop calibration has swung 0.70 -> 2.1s in one
-            # session at zero load), and short streaming/micro-batch
-            # queries are the most timing-sensitive — r6 flagged three
-            # code-unchanged queries up to 5.6x on exactly this noise. A
-            # warm time that WOULD flag as a regression is re-run twice
-            # and replaced by the median of the three warms, so only
-            # reproducible slowdowns reach regressions_vs_prev.
-            if (
-                all_median3
-                or _would_flag(name, warm)
-                or (_timing_sensitive(name) and warm < 1.0)
-            ):
-                warms = [warm]
-                for _ in range(2):
-                    t2 = time.perf_counter()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    warms.append(round(time.perf_counter() - t2, 3))
-                warm = statistics.median(warms)
-                remeasured.append(name)
-                # still flagging after the median? judge against the
-                # host speed NOW, not at bench start (see _recalibrate)
-                if _would_flag(name, warm):
-                    _recalibrate(name)
+            # Median of 3 warms for every query: this container's CPU
+            # throttle is BURSTY at sub-query timescales (a calib probe run
+            # seconds after a 2x-slow query measures fast), so a uniform
+            # host ratio cannot normalize it; only per-query medians damp
+            # it (the r10 single-shot driver run emitted 36 regression
+            # flags, every one adjudicated as throttle noise).
+            warms = []
+            for _ in range(3):
+                t1 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                warms.append(round(time.perf_counter() - t1, 3))
+            warm = statistics.median(warms)
+            # still flagging after the median? judge against the host
+            # speed NOW, not at bench start (see _recalibrate)
+            if _would_flag(name, warm):
+                _recalibrate(name)
             timings[name] = warm
         except Exception as exc:  # a broken query must not kill the bench
             print(f"bench: {name} failed: {exc!r}", file=sys.stderr)
@@ -375,24 +342,20 @@ def main() -> None:
     # each flag's runs (so the verdict is judged against the host speed
     # DURING the bracket, not at bench start). verdict=regression only
     # if the fresh median STILL exceeds the normalized threshold;
-    # host_noise otherwise. LORIS_BENCH_ADJUDICATE=0 disables.
+    # host_noise otherwise.
     flag_names = sorted(
         (n for n, r in regressions.items() if r["is_flag"]),
         key=lambda n: regressions[n]["now"] - regressions[n]["prev"],
         reverse=True,
     )
-    adjudicate = os.environ.get("LORIS_BENCH_ADJUDICATE", "1") != "0"
     # runaway guards: a globally-throttled host could flag dozens;
-    # bracket the 12 largest-absolute (and stop after ~5 min of bracket
-    # wall-clock) and mark the rest explicitly (no silent cap) — the
-    # driver runs this script under its own timeout and a storm both
-    # inflates the flag count AND slows every bracket
-    adj_cap = int(os.environ.get("LORIS_BENCH_ADJUDICATE_CAP", "12"))
-    adj_budget_sec = float(
-        os.environ.get("LORIS_BENCH_ADJUDICATE_BUDGET_SEC", "300")
-    )
+    # bracket the ADJUDICATE_CAP largest-absolute (and stop after
+    # ADJUDICATE_BUDGET_SEC of bracket wall-clock) and mark the rest
+    # explicitly (no silent cap) — the driver runs this script under its
+    # own timeout and a storm both inflates the flag count AND slows
+    # every bracket
     flags: dict[str, dict] = {}
-    if flag_names and adjudicate:
+    if flag_names:
         spark.stop()
         spark = make_session()
         warm_session(spark)
@@ -419,8 +382,8 @@ def main() -> None:
             session_ratio = min(max(fresh_calib / prev_calib, 1 / 3), 3.0)
         probe = _calib_probe()
         adj_t0 = time.perf_counter()
-        for name in flag_names[:adj_cap]:
-            if time.perf_counter() - adj_t0 > adj_budget_sec:
+        for name in flag_names[:ADJUDICATE_CAP]:
+            if time.perf_counter() - adj_t0 > ADJUDICATE_BUDGET_SEC:
                 flags[name] = {
                     "prev": prev[name],
                     "now": timings[name],
@@ -492,7 +455,7 @@ def main() -> None:
                     "now": timings[name],
                     "verdict": f"bracket_failed: {exc!r}"[:200],
                 }
-        for name in flag_names[adj_cap:]:
+        for name in flag_names[ADJUDICATE_CAP:]:
             flags[name] = {
                 "prev": prev[name],
                 "now": timings[name],
@@ -517,19 +480,14 @@ def main() -> None:
         # warm-time regressions >1.4x(host-normalized) and >0.3s vs the
         # previously committed BENCH_DETAIL.json:
         # {query: {prev, now, is_flag}}; is_flag marks the raw-ratio
-        # >=1.4 subset (the adjudicated population). Every candidate was
-        # re-run to a median-of-3 first (see `remeasured`).
+        # >=1.4 subset (the adjudicated population). Every warm time is
+        # a median-of-3.
         "regressions_vs_prev": regressions,
         # self-adjudication of every is_flag entry (r12 VERDICT item 4):
         # fresh-session median-of-5 bracket + calib probes around it;
         # verdict host_noise unless the fresh median still crosses the
         # normalized threshold. SCALE.md now only narrates these.
         "flags": flags,
-        # queries re-measured to a median-of-3: every would-flag
-        # candidate, plus (since r8) every sub-1s streaming/micro-batch/
-        # subprocess query by default — the population whose single-shot
-        # warms produced all of r6's and r7's noise flags
-        "remeasured_median3": remeasured,
         # host-speed calibration (fixed workloads): compare these before
         # reading anything into cross-round total drift
         "calib_python_loop_sec": calib_py,
@@ -547,16 +505,12 @@ def main() -> None:
         # the cold start ratio (see _recalibrate) — this host's clock
         # drifts WITHIN a session
         "midrun_recalib_jvm_sec": recalibs,
-        # true when every warm time in `queries` is a median-of-3
-        # (LORIS_BENCH_ALL_MEDIAN3=1 — the bursty-throttle damper)
-        "all_median3": all_median3,
         # run order is a seeded shuffle (r11 VERDICT item 6: alphabetical
         # order concentrated session aging on the t*-x* tail, producing
-        # dozens of false late-alphabet flags two rounds running); -1
-        # means alphabetical
-        "run_order_seed": seed,
+        # dozens of false late-alphabet flags two rounds running)
+        "run_order_seed": RUN_ORDER_SEED,
         # run positions at which the SparkContext was stopped and
-        # rebuilt (LORIS_BENCH_RECYCLE) — the aging reset; empty = off
+        # rebuilt (every RECYCLE_EVERY queries) — the aging reset
         "session_recycles_at": recycles,
         # adjudication self-description (r13 VERDICT item 9): under a
         # flag storm the 12-bracket cap / 5-min budget binds and flags
@@ -565,8 +519,8 @@ def main() -> None:
         # self-describing (SCALE.md narrates the latest storm from here)
         "adjudication": {
             "n_flags": len(flag_names),
-            "cap": adj_cap,
-            "budget_sec": adj_budget_sec,
+            "cap": ADJUDICATE_CAP,
+            "budget_sec": ADJUDICATE_BUDGET_SEC,
             "unadjudicated": sorted(
                 n
                 for n, f in flags.items()

@@ -9,7 +9,6 @@ from loris_mri_spark.operators.protocol_match import (
     RangeSpec,
     RegexSpec,
     identify_protocol,
-    identify_protocol_windowed,
 )
 from loris_mri_spark.operators.qc_checks import run_qc_checks
 
@@ -17,7 +16,6 @@ __all__ = [
     "asof_join",
     "get_or_create",
     "identify_protocol",
-    "identify_protocol_windowed",
     "ExactSpec",
     "PrioritySpec",
     "RangeSpec",

@@ -27,9 +27,7 @@ each task matches its partition's rows with no exchange at all. (An
 earlier form matched with ``filter`` + ``transform`` + ``array_min`` over
 an inlined ``array<struct>``; Spark evaluates those higher-order functions
 interpreted, outside codegen. Round-1 used a broadcast join + window +
-re-join, which scanned the big table twice and shuffled it once; that form
-is kept below as ``identify_protocol_windowed`` for rule tables too large
-to inline.)
+re-join, which scanned the big table twice and shuffled it once.)
 """
 
 from __future__ import annotations
@@ -40,7 +38,6 @@ from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from loris_mri_spark.functions.predicates import (
     in_range,
@@ -190,70 +187,3 @@ def identify_protocol(
             label_col, F.coalesce(F.col(label_col), F.lit(unmatched_label))
         )
     return out
-
-
-def _match_condition_joined(
-    ranges: Sequence[RangeSpec],
-    exacts: Sequence[ExactSpec],
-    regexes: Sequence[RegexSpec],
-) -> Column:
-    cond = F.lit(True)
-    for spec in exacts:
-        cond = cond & wildcard_eq(F.col(f"r.{spec.rule_col}"), F.col(f"s.{spec.value_col}"))
-    for spec in regexes:
-        cond = cond & regex_or_wildcard(
-            F.col(f"s.{spec.value_col}"), F.col(f"r.{spec.pattern_col}")
-        )
-    for spec in ranges:
-        cond = cond & in_range(
-            F.col(f"s.{spec.value_col}"),
-            F.col(f"r.{spec.min_col}"),
-            F.col(f"r.{spec.max_col}"),
-        )
-    return cond
-
-
-def identify_protocol_windowed(
-    scans: DataFrame,
-    rules: DataFrame,
-    scan_key: Sequence[str],
-    ranges: Sequence[RangeSpec] = (),
-    exacts: Sequence[ExactSpec] = (),
-    regexes: Sequence[RegexSpec] = (),
-    priority: Sequence[Column] | None = None,
-    rule_output_cols: Sequence[str] = ("scan_type",),
-    unmatched_label: str | None = "unidentified",
-    label_col: str = "scan_type",
-) -> DataFrame:
-    """Broadcast-join + window variant, for rule tables too large to inline
-    as a plan literal (rare — mri_protocol is O(100) rows in production).
-
-    Semantics differ from ``identify_protocol`` when ``scan_key`` is not
-    unique: first-match is selected PER KEY (all rows sharing a key get the
-    key's winning rule), not per physical row. Costs one shuffle on
-    ``scan_key`` plus a second scan of ``scans`` for the re-join — prefer
-    the inline form whenever the rule table fits on the driver.
-    """
-    s = scans.alias("s")
-    r = F.broadcast(rules).alias("r")
-    cond = _match_condition_joined(ranges, exacts, regexes)
-
-    matched = s.join(r, cond, "inner")
-    # Keep the window shuffle narrow: only scan key + rule outputs survive.
-    out_cols = [F.col(f"s.{k}") for k in scan_key] + [
-        F.col(f"r.{c}") for c in rule_output_cols
-    ]
-    order = list(priority) if priority is not None else [F.col("r.rule_id").asc()]
-    w = Window.partitionBy(*[F.col(f"s.{k}") for k in scan_key]).orderBy(*order)
-    first_match = (
-        matched.select(*out_cols, F.row_number().over(w).alias("__rn"))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-    joined = scans.join(first_match, on=list(scan_key), how="left")
-    if unmatched_label is not None:
-        joined = joined.withColumn(
-            label_col, F.coalesce(F.col(label_col), F.lit(unmatched_label))
-        )
-    return joined

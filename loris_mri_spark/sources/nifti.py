@@ -139,12 +139,13 @@ def nifti_voxel_stats(content: bytes) -> "dict[str, Any] | None":
 
     Classify, don't fail: non-NIfTI returns None; a structurally valid
     NIfTI whose voxels cannot be exactly summed — float-typed (datatype
-    16/64), unusable vox_offset (inf/huge), or a corrupt dim product
-    past 2^62 — returns ``{"is_nifti": True}`` with no stats (it IS a
-    NIfTI; consumers must not count it as 'other'); a TRUNCATED payload
-    yields stats over the complete leading voxels with complete=false
-    (the EDF partial-record contract). int64 wraparound on
-    large-magnitude int32/uint32 volumes is prevented by
+    16/64), unusable vox_offset (inf/huge), a corrupt dim product past
+    2^62, or an exact vsum/vsumsq outside the int64 sink columns (three
+    int32 voxels of 2^31-1 are enough) — returns ``{"is_nifti": True}``
+    with no stats (it IS a NIfTI; consumers must not count it as
+    'other'); a TRUNCATED payload yields stats over the complete leading
+    voxels with complete=false (the EDF partial-record contract). int64
+    wraparound on large-magnitude int32/uint32 volumes is prevented by
     :func:`_exact_moments`."""
     import numpy as np
 
@@ -185,6 +186,8 @@ def nifti_voxel_stats(content: bytes) -> "dict[str, Any] | None":
         # count=0 — classify as an empty read instead
         vals = np.empty(0, dtype=np.int64)
     vsum, vsumsq = _exact_moments(vals)
+    if vsumsq >= 2**63:  # |vsum| <= vsumsq for integer voxels
+        return {"is_nifti": True}
     mean = vsum / n_read if n_read else 0.0
     var = vsumsq / n_read - mean * mean if n_read else 0.0
     std = var**0.5 if var > 0 else 0.0

@@ -21,7 +21,7 @@ from loris_mri_spark.workload import query
 def _media_dir(sub: str) -> str:
     """Committed media fixture dir for ``sub`` (jpeg/video/audio),
     overridable via LORIS_MM_FIXTURES: the media scale sweep
-    (tools/bench_scale_media.py) points the REGISTERED queries at
+    (bench_scale.py media_extension) points the REGISTERED queries at
     genuinely scaled binary inputs (.scale/media/sfK) without changing
     their plan shape. Correctness runs never set the env var, so the
     golden oracles always see the committed fixtures."""

@@ -172,9 +172,10 @@ def test_voxel_stats_exact_past_2_53_beside_a_classified_file(spark, tmp_path):
     """A batch that mixes a classified (non-NIfTI) row with an int32
     volume whose vsumsq is past 2**53 still yields the exact moments: the
     classified row lacks the stats keys, and a float64 column built
-    across the two would drop vsumsq's low bits. coalesce(1) puts both
-    files in one batch (read_nifti_voxel_stats gives each tiny file its
-    own task)."""
+    across the two would drop vsumsq's low bits. A third volume whose
+    exact vsumsq is past int64 comes back as a NIfTI with no stats
+    instead of failing the batch. coalesce(1) puts all three files in one
+    batch (read_nifti_voxel_stats gives each tiny file its own task)."""
     import os
     import struct
 
@@ -189,6 +190,9 @@ def test_voxel_stats_exact_past_2_53_beside_a_classified_file(spark, tmp_path):
     (tmp_path / "b.nii").write_bytes(
         _mk_nifti((1,), struct.pack("<i", v), datatype=8)
     )
+    (tmp_path / "c.nii").write_bytes(
+        _mk_nifti((3,), struct.pack("<3i", v, v, v), datatype=8)
+    )
     files = (
         spark.read.format("binaryFile").load(str(tmp_path))
         .select("path", "content").coalesce(1)
@@ -202,3 +206,7 @@ def test_voxel_stats_exact_past_2_53_beside_a_classified_file(spark, tmp_path):
     assert v * v > 2**53
     assert rows["b.nii"]["vsumsq"] == v * v == 4611686014132420609
     assert rows["b.nii"]["vsum"] == rows["b.nii"]["vmax"] == v
+    assert 3 * v * v >= 2**63
+    assert rows["c.nii"]["is_nifti"] is True
+    assert rows["c.nii"]["vsumsq"] is None
+    assert len(rows) == 3

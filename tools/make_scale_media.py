@@ -1,32 +1,37 @@
-"""Deterministic scale-up of the MEDIA fixtures for the multimodal
-scale sweep (tools/bench_scale_media.py) — NOT an input to any
-correctness query; the committed tests/fixtures stay the only
-correctness input (their golden oracles pin exact per-file values).
+"""Deterministic scale-up of the committed media and BIDS fixtures for
+the fixture sweeps of bench_scale.py (`media_extension`,
+`eeg_bids_probe`, `mri_bids_probe`, `bids_dataset_probe`). These tiers
+are NOT an input to any correctness query; the committed tests/fixtures
+stay the only correctness input (their golden oracles pin exact
+per-file values).
 
-The committed media fixtures are 2-6 files each — enough to pin decoder
-bytes exactly, useless for a growth curve. This tool synthesizes
+Media: the committed media fixtures are 2-6 files each, enough to pin
+decoder bytes exactly and useless for a growth curve. make_tier writes
 .scale/media/sfK/{jpeg,video,audio} tiers whose BYTE VOLUME (and file
 count) grows Kx, using the same writers as tests/fixtures/generate.py,
 so LORIS_MM_FIXTURES can point the REGISTERED mm_* queries at each tier
-(workload/multimodal._media_dir) and the sweep measures the exact
-registered plan on genuinely scaled input. Per the SCALE.md Finding-4
-lesson (events was byte-identical per tier until r9 — every curve was a
+(workload/multimodal._media_dir). Per the SCALE.md Finding-4 lesson
+(events was byte-identical per tier until r9, which made every curve a
 flat lie), every file is seeded by its global index, so no two files at
-any tier are byte-identical, and the tool prints per-tier byte totals
-so the sweep can assert the input actually scaled.
+any tier are byte-identical. Decode cost for the native T.81 path is
+~16 ms per 256x192 grayscale frame (measured r10), so the 100x tier
+stays ~1-3 s of wall work on local[32] per family.
 
-Sizing: decode cost for the native T.81 path is ~16 ms per 256x192
-grayscale frame (measured r10), so the 100x tier stays ~1-3 s of wall
-work on local[32] per family — the exponent, not absolute time, is the
-signal.
+BIDS: the EEG and MRI import capstones are fixture-bound (6 recordings,
+8 acquisitions), and the axis that grows in production is recording
+COUNT. make_bids_tier clones both committed trees K times under fresh
+subject ids into .scale/bids_Kx/{bids_eeg,bids_mri}, so
+LORIS_BIDS_EEG_FIXTURES / LORIS_MRI_BIDS_FIXTURES point the registered
+queries at each tier. The committed fixtures are the 1x tier.
 
 Usage: python tools/make_scale_media.py [K ...]   (default: 1 10 100)
-Writes /root/repo/.scale/media/sfK/{jpeg,video,audio}/* (gitignored).
+Writes /root/repo/.scale/media/sfK and, for K > 1, /root/repo/.scale/bids_Kx
+(gitignored).
 """
 
 from __future__ import annotations
 
-import os
+import shutil
 import struct
 import sys
 from pathlib import Path
@@ -43,6 +48,8 @@ from generate import (  # noqa: E402  (fixture writers are the spec)
 )
 
 OUT_ROOT = _REPO / ".scale" / "media"
+FIXTURES = _REPO / "tests" / "fixtures"
+BIDS_TREES = ("bids_eeg", "bids_mri")
 
 # 1x tier counts; tier K multiplies each by K. Dims chosen so the 100x
 # tier is seconds, not minutes, on local[32] (module docstring).
@@ -103,10 +110,62 @@ def make_tier(k: int) -> None:
           f"audio={_du(adir)} B", flush=True)
 
 
+def clone_bids(src: Path, dst: Path, mult: int) -> None:
+    """Clone the BIDS tree `src` mult times into `dst`: clone k of subject
+    sub-0i becomes sub-<1000*k+i>, with its participants.tsv row mirrored
+    (a subject the source leaves out of participants.tsv stays out, so
+    every tier keeps the 1x error-path mix), its file names and scans.tsv
+    rewritten, and a clone-specific marker appended after each NIfTI's
+    gzip stream (header parse unaffected, blake2b distinct: within a
+    clone a duplicate still duplicates, but clones do not collapse into
+    one global duplicate cluster). Other top-level files are copied
+    once."""
+    tmp = dst.with_name(dst.name + ".tmp")
+    shutil.rmtree(tmp, ignore_errors=True)
+    tmp.mkdir(parents=True)
+    hdr, *prows = (src / "participants.tsv").read_text().splitlines()
+    rows_by_sub = {r.split("\t", 1)[0]: r for r in prows}
+    subs = sorted(p.name for p in src.glob("sub-*") if p.is_dir())
+    out_rows = [hdr]
+    for k in range(mult):
+        marker = f"#clone{k:05d}".encode()
+        for sub in subs:
+            new = f"sub-{1000 * k + int(sub[4:])}"
+            if sub in rows_by_sub:
+                out_rows.append(new + rows_by_sub[sub][len(sub):])
+            for f in sorted((src / sub).rglob("*")):
+                if not f.is_file():
+                    continue
+                rel = f.relative_to(src / sub)
+                out = tmp / new / rel.parent / f.name.replace(sub, new)
+                out.parent.mkdir(parents=True, exist_ok=True)
+                if f.name.endswith("_scans.tsv"):
+                    out.write_text(f.read_text().replace(sub, new))
+                elif ".nii" in f.name:
+                    out.write_bytes(f.read_bytes() + marker)
+                else:
+                    shutil.copyfile(f, out)
+    (tmp / "participants.tsv").write_text("\n".join(out_rows) + "\n")
+    for f in src.iterdir():
+        if f.is_file() and f.name != "participants.tsv":
+            shutil.copyfile(f, tmp / f.name)
+    shutil.rmtree(dst, ignore_errors=True)
+    tmp.rename(dst)
+
+
+def make_bids_tier(k: int) -> None:
+    root = _REPO / ".scale" / f"bids_{k}x"
+    for tree in BIDS_TREES:
+        clone_bids(FIXTURES / tree, root / tree, k)
+        print(f"bids_{k}x/{tree}: {_du(root / tree)} B", flush=True)
+
+
 def main() -> None:
     ks = [int(a) for a in sys.argv[1:]] or [1, 10, 100]
     for k in ks:
         make_tier(k)
+        if k > 1:
+            make_bids_tier(k)
 
 
 if __name__ == "__main__":
