@@ -275,11 +275,11 @@ def main() -> None:
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             cold[name] = round(time.perf_counter() - t0, 3)
-            # Median of 3 warms for every query: this container's CPU
+            # Median of 3 warms for every query: a shared host's CPU
             # throttle is BURSTY at sub-query timescales (a calib probe run
             # seconds after a 2x-slow query measures fast), so a uniform
             # host ratio cannot normalize it; only per-query medians damp
-            # it (the r10 single-shot driver run emitted 36 regression
+            # it (an r10 single-shot full run emitted 36 regression
             # flags, every one adjudicated as throttle noise).
             warms = []
             for _ in range(3):
@@ -351,8 +351,8 @@ def main() -> None:
     # runaway guards: a globally-throttled host could flag dozens;
     # bracket the ADJUDICATE_CAP largest-absolute (and stop after
     # ADJUDICATE_BUDGET_SEC of bracket wall-clock) and mark the rest
-    # explicitly (no silent cap) — the driver runs this script under its
-    # own timeout and a storm both inflates the flag count AND slows
+    # explicitly (no silent cap) — a full run usually sits under an
+    # outer timeout and a storm both inflates the flag count AND slows
     # every bracket
     flags: dict[str, dict] = {}
     if flag_names:

@@ -23,7 +23,8 @@ One rule for every growth number:
   keys a run does not write stay untouched.
 
 Usage: python bench_scale.py <sweep> [query ...]
-(`queries` ~10 min on local[32]; `sf10_extension` ~45-70 min)
+(`queries` ~10 min on local[32]; `sf10_extension` ~45-70 min). The sf0.1
+catalog is SPARK_GRAFT_SF_DIR, else `.scale/sf0.1`.
 """
 
 from __future__ import annotations
@@ -42,9 +43,11 @@ if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
 _SCALE = _REPO / ".scale"
-# the driver's sf0.1 catalog: ratio 1 of the catalog tiers, and the table
-# argument of the fixture sweeps (whose queries read the fixture trees)
-TABLES_DIR = "/root/testdata/sf0.1"
+# the sf0.1 catalog (SPARK_GRAFT_SF_DIR, as for bench.py; else the copy
+# `tools/make_scale_data.py 1` writes): ratio 1 of the catalog tiers, and
+# the table argument of the fixture sweeps (whose queries read the
+# fixture trees)
+TABLES_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", str(_SCALE / "sf0.1"))
 
 
 class Tier(NamedTuple):
@@ -124,7 +127,7 @@ SCALE_QUERIES = (
     "mm_frame_sample",
     "pipeline_non_minc_insertion",
     # registered late-r10 / r11: measured at registration time so the
-    # growth curve exists before their first driver row
+    # growth curve exists before their first bench.py row
     "ann_sq8_recall",
     "corpus_ngram_novelty",
     "text_bpe_train_vocab",
@@ -133,7 +136,7 @@ SCALE_QUERIES = (
 
 # The 10x -> 100x decade, where fixed overhead has amortized away.
 # SemDeDup runs only in its corpus-scale configuration (k ~ sqrt(n)): the
-# oracle-pinned k=8 exists for driver bit-parity, and its per-cell
+# oracle-pinned k=8 exists for golden-oracle bit-parity, and its per-cell
 # n^2/k^2 matrices are what the cellstats guard excludes at scale.
 SF10_QUERIES = (
     "dedup_exact",

@@ -25,7 +25,7 @@ LORIS_BIDS_EEG_FIXTURES / LORIS_MRI_BIDS_FIXTURES point the registered
 queries at each tier. The committed fixtures are the 1x tier.
 
 Usage: python tools/make_scale_media.py [K ...]   (default: 1 10 100)
-Writes /root/repo/.scale/media/sfK and, for K > 1, /root/repo/.scale/bids_Kx
+Writes .scale/media/sfK and, for K > 1, .scale/bids_Kx under the repo root
 (gitignored).
 """
 
