@@ -1,11 +1,17 @@
 """Benchmark runner — times every declared query at the bench scale factor.
 
-The LAST line of stdout is one COMPACT JSON line (the driver keeps only the
-output tail, so the big per-query map must not live there):
-  {"metric": "workload_total_sec", "value": <total>, "unit": "sec",
-   "sf": <sf>, "n_queries": N, "cold_total_sec": <total>}
-The full per-query timing map is printed on an EARLIER stdout line and
+The LAST line of stdout is one COMPACT JSON line with nine keys, so a
+reader that keeps only the output tail still gets every per-query time:
+  {"metric": "workload_total_sec", "value": <warm total>, "unit": "sec",
+   "sf": <sf>, "n_queries": N, "queries": {<query>: <warm sec>},
+   "cold_total_sec": <cold total>, "calib_python_loop_sec": <sec>,
+   "calib_jvm_agg_sec": <sec>}
+The full detail (cold times too) is printed on an EARLIER stdout line and
 written to BENCH_DETAIL.json next to this script.
+
+bench.py is a timer: it writes its record and never reads one back. Runs
+are compared outside it, by diffing two runs' `queries` maps; the two
+one-shot calibration timings tell a slower host from a slower plan.
 
 Each query is forced end-to-end with the `noop` sink (full execution on the
 executors, no result serialization to Python) — the honest measure of plan
@@ -28,13 +34,9 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 # Run shape (see the comments at each use): a seeded-shuffled query
-# order, a fresh SparkContext every RECYCLE_EVERY queries, and an in-run
-# adjudication bracket for at most ADJUDICATE_CAP regression flags within
-# ADJUDICATE_BUDGET_SEC of wall clock.
+# order and a fresh SparkContext every RECYCLE_EVERY queries.
 RUN_ORDER_SEED = 12
 RECYCLE_EVERY = 60
-ADJUDICATE_CAP = 12
-ADJUDICATE_BUDGET_SEC = 300.0
 
 
 def main() -> None:
@@ -153,17 +155,6 @@ def main() -> None:
         "sum(id % 1000000) AS s"  # stays far below int64 in ANSI mode
     ).write.format("noop").mode("overwrite").save()
     calib_jvm = round(time.perf_counter() - t0, 3)
-    # Second, JIT-HOT run of the same plan: the baseline for MID-RUN
-    # drift probes. The first run pays whole-stage-codegen compilation;
-    # every later in-session re-measure runs hot, 5-10x faster — hot
-    # probes are comparable only to this hot baseline, never to the
-    # cold `calib_jvm` (see _recalibrate).
-    t0 = time.perf_counter()
-    spark.range(200_000_000).selectExpr(
-        "sum(id % 1000000) AS s"
-    ).write.format("noop").mode("overwrite").save()
-    calib_jvm_hot = round(time.perf_counter() - t0, 3)
-
     # One cold run per query, then three warm runs: the cold run pays
     # one-time whole-stage-codegen compilation (seconds for the big
     # expression trees — session cost, amortized to zero on a long-lived
@@ -171,66 +162,6 @@ def main() -> None:
     # the warm median; cold totals are kept alongside for transparency.
     import gc
     import statistics
-
-    # Load the prior committed detail BEFORE the loop so suspected
-    # regressions can be re-measured in place (see below).
-    prev_path = Path(_REPO, "BENCH_DETAIL.json")
-    prev: dict[str, float] = {}
-    prev_calib = 0.0
-    host_ratio = 1.0
-    if prev_path.exists():
-        try:
-            prev_detail = json.loads(prev_path.read_text())
-            prev = prev_detail.get("queries", {})
-            prev_calib = prev_detail.get("calib_jvm_agg_sec", 0.0)
-            if prev_calib and calib_jvm:
-                host_ratio = min(max(calib_jvm / prev_calib, 1 / 3), 3.0)
-        except (json.JSONDecodeError, OSError):
-            prev = {}
-            prev_calib = 0.0
-
-    # MID-RUN host recalibration (r10): the start-of-run ratio is not
-    # enough — this container's clock throttles WITHIN a session (the
-    # fixed JVM calib measured 0.77 s at bench start and 3.5 s an hour
-    # later on identical code), so late-alphabet queries get inflated
-    # against a stale fast-host ratio and flag spuriously (r10 first
-    # run: three late-alphabet sub-3s write-path queries, all of which
-    # bracket at prior-round times standalone). When a median-of-3 warm
-    # STILL flags, re-measure the calib workload at that instant and
-    # judge against the CURRENT ratio; per-query recalibrations are
-    # recorded for transparency.
-    ratio_at: dict[str, float] = {}
-    recalibs: dict[str, float] = {}
-
-    def _ratio_for(name: str) -> float:
-        return ratio_at.get(name, host_ratio)
-
-    def _would_flag(name: str, now: float) -> bool:
-        was = prev.get(name, -1.0)
-        scaled = was * _ratio_for(name)
-        return was > 0 and now > 0 and now > 1.4 * scaled and now - scaled > 0.3
-
-    def _recalibrate(name: str) -> None:
-        """Re-judge a still-flagging query against host speed NOW. The
-        probe runs JIT-HOT, so it is compared to the hot start-of-run
-        baseline and CHAINED onto the cold-vs-cold start ratio:
-        ratio = (calib_now_cold-equivalent / prev_cold)
-              = host_ratio * (probe_hot / calib_jvm_hot).
-        (The pre-r13 version divided the hot probe by the COLD
-        prev_calib directly, which clamps to 1/3 and can only ever
-        TIGHTEN the threshold — the r10 'relax when throttled'
-        intent never actually fired.)"""
-        if not prev_calib or not calib_jvm_hot:
-            return
-        t0 = time.perf_counter()
-        spark.range(200_000_000).selectExpr(
-            "sum(id % 1000000) AS s"
-        ).write.format("noop").mode("overwrite").save()
-        now_calib = round(time.perf_counter() - t0, 3)
-        recalibs[name] = now_calib
-        ratio_at[name] = min(
-            max(host_ratio * now_calib / calib_jvm_hot, 1 / 3), 3.0
-        )
 
     # SEEDED-SHUFFLED run order (r11 VERDICT item 6): alphabetical order
     # ran the t*-x* families last every round, so session aging (GC
@@ -264,11 +195,6 @@ def main() -> None:
             spark.stop()
             spark = make_session()
             warm_session(spark)
-            # re-hot the calib plan in the fresh JVM so any later
-            # _recalibrate probe stays comparable to calib_jvm_hot
-            spark.range(200_000_000).selectExpr(
-                "sum(id % 1000000) AS s"
-            ).write.format("noop").mode("overwrite").save()
             recycles.append(qi)
         fn = workload.QUERIES[name]
         try:
@@ -276,21 +202,16 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             cold[name] = round(time.perf_counter() - t0, 3)
             # Median of 3 warms for every query: a shared host's CPU
-            # throttle is BURSTY at sub-query timescales (a calib probe run
-            # seconds after a 2x-slow query measures fast), so a uniform
+            # throttle is BURSTY at sub-query timescales, so a uniform
             # host ratio cannot normalize it; only per-query medians damp
             # it (an r10 single-shot full run emitted 36 regression
-            # flags, every one adjudicated as throttle noise).
+            # flags, every one later judged throttle noise).
             warms = []
             for _ in range(3):
                 t1 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 warms.append(round(time.perf_counter() - t1, 3))
             warm = statistics.median(warms)
-            # still flagging after the median? judge against the host
-            # speed NOW, not at bench start (see _recalibrate)
-            if _would_flag(name, warm):
-                _recalibrate(name)
             timings[name] = warm
         except Exception as exc:  # a broken query must not kill the bench
             print(f"bench: {name} failed: {exc!r}", file=sys.stderr)
@@ -305,162 +226,6 @@ def main() -> None:
     total = round(sum(v for v in timings.values() if v >= 0), 3)
     cold_total = round(sum(v for v in cold.values() if v >= 0), 3)
 
-    # Regression diff vs the previously committed detail: flag any query
-    # whose warm time grew >1.4x AND >0.3s absolute (the absolute floor
-    # keeps sub-second queries' scheduling noise out of the report).
-    # HOST-DRIFT NORMALIZATION: this container's CPU speed swings >2x
-    # between runs at zero load (frequency throttling / noisy neighbor —
-    # measured calib_python 0.70 -> 1.76 within one session). Compare
-    # against the prior run's calibration and scale the threshold by the
-    # host-speed ratio, so a uniformly slower host doesn't masquerade as
-    # dozens of per-query plan regressions — and a FASTER host doesn't
-    # mask real ones (ratio < 1 scales prior times down). Clamped to
-    # [1/3, 3] so a broken calibration can't swing the verdict.
-    # Each entry carries `is_flag`: True when the RAW ratio now/prev is
-    # >=1.4 (the subset SCALE.md and the judge adjudicate); False means
-    # the entry only crossed the host-normalized threshold because the
-    # calibration said this host is faster (ratio < 1 scales prior times
-    # down), which is drift-tracking signal, not a per-query flag.
-    regressions: dict[str, dict] = {
-        name: {
-            "prev": prev[name],
-            "now": now,
-            "is_flag": now >= 1.4 * prev[name],
-        }
-        for name, now in timings.items()
-        if _would_flag(name, now)
-    }
-
-    # AUTO-ADJUDICATION (r12 VERDICT item 4): four rounds running, every
-    # committed flag was adjudicated BY HAND (SCALE.md notes + the judge
-    # re-bracketing standalone) and every one came back host noise — the
-    # in-run evidence (mid-run recalibs catching throttle bursts) was
-    # suggestive but not a verdict. Do the bracket the judge does,
-    # in-file: ONE fresh session (aging reset — flags cluster at late
-    # run positions), shared cache re-populated by an untimed cold pass,
-    # median-of-5 warms per flag, a JVM calib probe before and after
-    # each flag's runs (so the verdict is judged against the host speed
-    # DURING the bracket, not at bench start). verdict=regression only
-    # if the fresh median STILL exceeds the normalized threshold;
-    # host_noise otherwise.
-    flag_names = sorted(
-        (n for n, r in regressions.items() if r["is_flag"]),
-        key=lambda n: regressions[n]["now"] - regressions[n]["prev"],
-        reverse=True,
-    )
-    # runaway guards: a globally-throttled host could flag dozens;
-    # bracket the ADJUDICATE_CAP largest-absolute (and stop after
-    # ADJUDICATE_BUDGET_SEC of bracket wall-clock) and mark the rest
-    # explicitly (no silent cap) — a full run usually sits under an
-    # outer timeout and a storm both inflates the flag count AND slows
-    # every bracket
-    flags: dict[str, dict] = {}
-    if flag_names:
-        spark.stop()
-        spark = make_session()
-        warm_session(spark)
-
-        def _calib_probe() -> float:
-            t0 = time.perf_counter()
-            spark.range(200_000_000).selectExpr(
-                "sum(id % 1000000) AS s"
-            ).write.format("noop").mode("overwrite").save()
-            return round(time.perf_counter() - t0, 3)
-
-        # The verdict ratio must compare LIKE WITH LIKE: prev_calib is a
-        # one-shot measure that PAYS whole-stage-codegen compilation, so
-        # only this session's FIRST probe (same cold-codegen state) is
-        # comparable to it. Subsequent probes run JIT-hot 5-10x faster —
-        # judging against them clamps the ratio to 1/3 and brands fully
-        # recovered queries as regressions (the first r13 run did
-        # exactly that: fresh_median5 2.24 vs prev 2.35 -> "regression").
-        # Hot probes are still recorded per flag as burstiness evidence;
-        # they are comparable to EACH OTHER, not to prev_calib.
-        fresh_calib = _calib_probe()
-        session_ratio = 1.0
-        if prev_calib:
-            session_ratio = min(max(fresh_calib / prev_calib, 1 / 3), 3.0)
-        probe = _calib_probe()
-        adj_t0 = time.perf_counter()
-        for name in flag_names[:ADJUDICATE_CAP]:
-            if time.perf_counter() - adj_t0 > ADJUDICATE_BUDGET_SEC:
-                flags[name] = {
-                    "prev": prev[name],
-                    "now": timings[name],
-                    "verdict": "unadjudicated_time_budget",
-                }
-                continue
-            fn = workload.QUERIES[name]
-            try:
-                # untimed cold pass: codegen + shared-cache population
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs = []
-                for _ in range(5):
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    runs.append(round(time.perf_counter() - t0, 3))
-                med = statistics.median(runs)
-                probe_after = _calib_probe()
-                was = prev[name]
-                # Two-sided bar (r13 fix): the fresh median must cross
-                # BOTH the host-normalized threshold AND the same RAW
-                # 1.4x bar that selected the flag. When prev came from a
-                # throttled session (e.g. prev_calib 1.394 vs fresh
-                # 0.285, ratio clamped to 1/3) the normalized bar alone
-                # demands fresh < 0.47x prev — impossible for queries
-                # whose cost is scheduler/micro-batch floor, not CPU, so
-                # fully-recovered queries (fresh median raw BELOW prev)
-                # were branded "regression". Flag selection is raw-ratio
-                # >= 1.4, so a faster-host-masked regression never
-                # enters this population anyway; the verdict now takes
-                # the max of the two bars instead of the min.
-                still = (
-                    med > 1.4 * was * session_ratio
-                    and med - was * session_ratio > 0.3
-                    and med >= 1.4 * was
-                    and med - was > 0.3
-                )
-                # STORM DETECTOR (measured r13: the fixed calib read
-                # 14.84 s cold / 0.449 s hot in ONE session and a
-                # query's five warms swung 5.8 -> 38.3 s): when the
-                # bracket's own probes or runs swing this hard, no
-                # scalar ratio supports a binary verdict — report that
-                # honestly instead of a coin-flip regression call.
-                probes = [p for p in (probe, probe_after) if p > 0]
-                bursty = (
-                    (len(probes) == 2 and max(probes) > 3 * min(probes))
-                    or max(runs) > 4 * min(runs)
-                )
-                verdict = "regression" if still else "host_noise"
-                if still and bursty:
-                    verdict = "indeterminate_host_burst"
-                flags[name] = {
-                    "prev": was,
-                    "now": timings[name],
-                    "fresh_median5": med,
-                    "fresh_runs": runs,
-                    "fresh_calib_cold": fresh_calib,
-                    "session_ratio": round(session_ratio, 3),
-                    "calib_probes_hot": [probe, probe_after],
-                    "verdict": verdict,
-                }
-                probe = probe_after
-            except Exception as exc:  # noqa: BLE001
-                flags[name] = {
-                    "prev": prev[name],
-                    "now": timings[name],
-                    "verdict": f"bracket_failed: {exc!r}"[:200],
-                }
-        for name in flag_names[ADJUDICATE_CAP:]:
-            flags[name] = {
-                "prev": prev[name],
-                "now": timings[name],
-                "verdict": "unadjudicated_over_cap",
-            }
     detail = {
         "queries": timings,
         "cold": cold,
@@ -477,34 +242,10 @@ def main() -> None:
         # state) as the plan-cost signal and `cold` as transparency only.
         "notes": "cold times are order/GC-dependent session effects; "
         "warm `queries` timings are the plan-cost signal",
-        # warm-time regressions >1.4x(host-normalized) and >0.3s vs the
-        # previously committed BENCH_DETAIL.json:
-        # {query: {prev, now, is_flag}}; is_flag marks the raw-ratio
-        # >=1.4 subset (the adjudicated population). Every warm time is
-        # a median-of-3.
-        "regressions_vs_prev": regressions,
-        # self-adjudication of every is_flag entry (r12 VERDICT item 4):
-        # fresh-session median-of-5 bracket + calib probes around it;
-        # verdict host_noise unless the fresh median still crosses the
-        # normalized threshold. SCALE.md now only narrates these.
-        "flags": flags,
         # host-speed calibration (fixed workloads): compare these before
         # reading anything into cross-round total drift
         "calib_python_loop_sec": calib_py,
         "calib_jvm_agg_sec": calib_jvm,
-        # JIT-hot second run of the calib plan: the baseline mid-run
-        # drift probes are judged against (hot-to-hot; the cold
-        # calib_jvm is comparable only to other cold first-runs)
-        "calib_jvm_hot_sec": calib_jvm_hot,
-        # threshold multiplier applied to the regression diff above
-        # (calib_jvm now / calib_jvm of the committed detail, clamped)
-        "host_speed_ratio_vs_prev": round(host_ratio, 3),
-        # mid-run recalibrations: for each query whose median-of-3 still
-        # flagged against the START-of-run ratio, the HOT JVM calib time
-        # measured at that moment; its flag ratio chains hot-drift onto
-        # the cold start ratio (see _recalibrate) — this host's clock
-        # drifts WITHIN a session
-        "midrun_recalib_jvm_sec": recalibs,
         # run order is a seeded shuffle (r11 VERDICT item 6: alphabetical
         # order concentrated session aging on the t*-x* tail, producing
         # dozens of false late-alphabet flags two rounds running)
@@ -512,28 +253,6 @@ def main() -> None:
         # run positions at which the SparkContext was stopped and
         # rebuilt (every RECYCLE_EVERY queries) — the aging reset
         "session_recycles_at": recycles,
-        # adjudication self-description (r13 VERDICT item 9): under a
-        # flag storm the 12-bracket cap / 5-min budget binds and flags
-        # age out with only per-entry verdicts to show it; this summary
-        # names the unadjudicated set in ONE field so a storm run is
-        # self-describing (SCALE.md narrates the latest storm from here)
-        "adjudication": {
-            "n_flags": len(flag_names),
-            "cap": ADJUDICATE_CAP,
-            "budget_sec": ADJUDICATE_BUDGET_SEC,
-            "unadjudicated": sorted(
-                n
-                for n, f in flags.items()
-                if str(f.get("verdict", "")).startswith("unadjudicated")
-            ),
-            "storm": sum(
-                1
-                for f in flags.values()
-                if str(f.get("verdict", "")).startswith("unadjudicated")
-                or f.get("verdict") == "indeterminate_host_burst"
-            )
-            >= 3,
-        },
     }
     Path(_REPO, "BENCH_DETAIL.json").write_text(json.dumps(detail, indent=1))
     # Full detail on an EARLIER line (transparency when the tail survives).

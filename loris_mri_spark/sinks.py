@@ -359,6 +359,63 @@ ORTHO_SCHEMA = (
 )
 
 
+def _ortho_rows(path: str, content: bytes):
+    """ortho_preview's row function: the three (file, plane) rows of one
+    volume, or none for an undecodable or non-int16 one."""
+    import gzip
+
+    from loris_mri_spark.sources.nifti import parse_nifti_bytes
+
+    b = content
+    if b[:2] == b"\x1f\x8b":
+        try:
+            b = gzip.decompress(b)
+        except Exception:
+            return
+    meta = parse_nifti_bytes(b)
+    if not meta.get("is_nifti") or meta.get("datatype") != 4:
+        return  # int16 volumes only; others stay on the seam
+    nx, ny, nz = meta["xspace"], meta["yspace"], meta["zspace"]
+    nvox = nx * ny * nz
+    if nx <= 0 or ny <= 0 or nz <= 0 or 352 + 2 * nvox > len(b):
+        return
+    v = struct.unpack_from(f"<{nvox}h", b, 352)  # t=0 volume
+    vmin, vmax = min(v), max(v)
+    span = vmax - vmin
+
+    def px(val: int) -> int:
+        # round-half-up((val-vmin)*255/span) in pure ints
+        return ((val - vmin) * 510 + span) // (2 * span) if span else 0
+
+    def at(x: int, y: int, z: int) -> int:
+        return v[x + y * nx + z * nx * ny]  # x-fastest layout
+
+    planes = {
+        "axial": [
+            [px(at(x, y, nz // 2)) for x in range(nx)] for y in range(ny)
+        ],
+        "coronal": [
+            [px(at(x, ny // 2, z)) for x in range(nx)] for z in range(nz)
+        ],
+        "sagittal": [
+            [px(at(nx // 2, y, z)) for y in range(ny)] for z in range(nz)
+        ],
+    }
+    for plane, grid in planes.items():
+        h, w = len(grid), len(grid[0])
+        png = png_preview(grid)
+        s = sum(sum(r) for r in grid)
+        yield {
+            "path": path,
+            "plane": plane,
+            "width": w,
+            "height": h,
+            "n_png_bytes": len(png),
+            "mean_px_r": round(s / (w * h), 4),
+            "px_center": grid[h // 2][w // 2],
+        }
+
+
 def ortho_preview(df: DataFrame) -> DataFrame:
     """S15 completion: 3-plane ortho-slice preview — the reference's pic
     is a nilearn ortho plot of the volume's three central orthogonal
@@ -370,75 +427,13 @@ def ortho_preview(df: DataFrame) -> DataFrame:
     each encoded as a real PNG with the stored-deflate encoder above, so
     n_png_bytes is an exact function of the slice dims. Output: one row
     per (file, plane) with the PNG size and slice stats; undecodable or
-    non-int16 volumes are skipped (classify, don't fail). Arrow-batched
-    mapInPandas, one task per file batch — per-file Python is inherent to
-    preview rendering (the reference shells out to nilearn per file)."""
-    import gzip as _gzip
-    from typing import Iterator as _Iterator
+    non-int16 volumes are skipped (classify, don't fail). One task per
+    file batch through `sources.files.map_rows` — per-file Python is
+    inherent to preview rendering (the reference shells out to nilearn
+    per file)."""
+    from loris_mri_spark.sources.files import map_rows
 
-    from loris_mri_spark.sources.nifti import parse_nifti_bytes
-
-    def run(batches: "_Iterator[pd.DataFrame]") -> "_Iterator[pd.DataFrame]":
-        cols = [c.split(" ")[0] for c in ORTHO_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                b = bytes(content)
-                if b[:2] == b"\x1f\x8b":
-                    try:
-                        b = _gzip.decompress(b)
-                    except Exception:
-                        continue
-                meta = parse_nifti_bytes(b)
-                if not meta.get("is_nifti") or meta.get("datatype") != 4:
-                    continue  # int16 volumes only; others stay on the seam
-                nx, ny, nz = meta["xspace"], meta["yspace"], meta["zspace"]
-                nvox = nx * ny * nz
-                if nx <= 0 or ny <= 0 or nz <= 0 or 352 + 2 * nvox > len(b):
-                    continue
-                v = struct.unpack_from(f"<{nvox}h", b, 352)  # t=0 volume
-                vmin, vmax = min(v), max(v)
-                span = vmax - vmin
-
-                def px(val: int) -> int:
-                    # round-half-up((val-vmin)*255/span) in pure ints
-                    return ((val - vmin) * 510 + span) // (2 * span) if span else 0
-
-                def at(x: int, y: int, z: int) -> int:
-                    return v[x + y * nx + z * nx * ny]  # x-fastest layout
-
-                planes = {
-                    "axial": [
-                        [px(at(x, y, nz // 2)) for x in range(nx)]
-                        for y in range(ny)
-                    ],
-                    "coronal": [
-                        [px(at(x, ny // 2, z)) for x in range(nx)]
-                        for z in range(nz)
-                    ],
-                    "sagittal": [
-                        [px(at(nx // 2, y, z)) for y in range(ny)]
-                        for z in range(nz)
-                    ],
-                }
-                for plane, grid in planes.items():
-                    h, w = len(grid), len(grid[0])
-                    png = png_preview(grid)
-                    s = sum(sum(r) for r in grid)
-                    rows.append(
-                        {
-                            "path": path,
-                            "plane": plane,
-                            "width": w,
-                            "height": h,
-                            "n_png_bytes": len(png),
-                            "mean_px_r": round(s / (w * h), 4),
-                            "px_center": grid[h // 2][w // 2],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(run, schema=ORTHO_SCHEMA)
+    return map_rows(df.select("path", "content"), _ortho_rows, ORTHO_SCHEMA)
 
 
 def png_preview_udf(content_col: Column, size: int = 8) -> Column:

@@ -37,6 +37,7 @@ from __future__ import annotations
 import os
 from typing import Any, Iterator, Sequence
 
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSourceStreamArrowWriter,
     DataSourceStreamWriter,
@@ -52,6 +53,7 @@ from pyspark.sql.datasource import (
 )
 
 from loris_mri_spark.sources.dicom import DICOM_SCHEMA, parse_dicom_bytes
+from loris_mri_spark.sources.files import map_rows
 from loris_mri_spark.sources.nifti import NIFTI_SCHEMA, parse_nifti_bytes
 
 FORMAT_NAME = "loris_headers"
@@ -243,6 +245,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from loris_mri_spark.sinks import _pb_varint
+
 CHUNKS_FORMAT = "loris_chunks"
 
 # Staged "bx-" files (no batch-id local property at write time) are only
@@ -255,18 +259,6 @@ _BX_SWEEP_AGE_SEC = 3600.0
 CHUNK_WRITE_SCHEMA = (
     "index long, downsampling long, cutoff long, samples array<float>"
 )
-
-
-def _pb_varint_local(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
 
 
 def _encode_chunk_row(row) -> bytes:
@@ -320,7 +312,7 @@ def _encode_chunk_record_batch(batch) -> "tuple[bytes, int, int]":
                 int(row["cutoff"] or 0),
                 list(row["samples"] or []),
             )
-            out += _pb_varint_local(len(msg)) + msg
+            out += _pb_varint(len(msg)) + msg
             msg_total += len(msg)
         return bytes(out), n, msg_total
 
@@ -339,7 +331,7 @@ def _encode_chunk_record_batch(batch) -> "tuple[bytes, int, int]":
     msgs, msg_total = pb_encode_float_chunk_vec(idx, ds, cut, samp)
     out = bytearray()
     for msg in msgs:
-        out += _pb_varint_local(len(msg)) + msg
+        out += _pb_varint(len(msg)) + msg
     return bytes(out), n, msg_total
 
 
@@ -373,7 +365,7 @@ class _ChunksWriter(DataSourceWriter):
         with open(os.path.join(self.staging, fname), "wb") as fh:
             for row in iterator:
                 msg = _encode_chunk_row(row)
-                fh.write(_pb_varint_local(len(msg)))
+                fh.write(_pb_varint(len(msg)))
                 fh.write(msg)
                 n += 1
                 total += len(msg)
@@ -470,7 +462,7 @@ class _ChunksStreamWriter(DataSourceStreamWriter):
         with open(os.path.join(self.staging, fname), "wb") as fh:
             for row in iterator:
                 msg = _encode_chunk_row(row)
-                fh.write(_pb_varint_local(len(msg)))
+                fh.write(_pb_varint(len(msg)))
                 fh.write(msg)
                 n += 1
                 total += len(msg)
@@ -624,6 +616,35 @@ def decode_chunk_stream(data: bytes) -> list[dict]:
                 pos = end
         out.append(msg)
     return out
+
+
+def _chunk_stream_totals(content: bytes) -> Iterator[dict]:
+    recs = decode_chunk_stream(content)
+    yield {
+        "n_chunks": len(recs),
+        "sum_index": sum(r["index"] for r in recs),
+        "n_floats": sum(len(r["samples"]) for r in recs),
+    }
+
+
+def read_chunk_totals(spark, paths):
+    """Read-back audit of landed FloatChunk stream files: every file is
+    decoded on the EXECUTORS (binaryFile scan + decode_chunk_stream
+    through ``files.map_rows``, never a driver loop over blobs), and the
+    one returned Row sums their n_chunks, sum_index and n_floats."""
+    return (
+        map_rows(
+            spark.read.format("binaryFile").load(paths).select("content"),
+            _chunk_stream_totals,
+            "n_chunks long, sum_index long, n_floats long",
+        )
+        .agg(
+            F.sum("n_chunks").alias("n_chunks"),
+            F.sum("sum_index").alias("sum_index"),
+            F.sum("n_floats").alias("n_floats"),
+        )
+        .first()
+    )
 
 
 def register_chunks(spark) -> None:

@@ -98,7 +98,7 @@ def stream_events(
 #: must be sized to STATE VOLUME, not driver cores: a CPU-sized count
 #: (32-128) pays hundreds of store lifecycles to drain a small fixture.
 #: Production deployments size this per stream (state bytes / ~100 MB).
-STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("LORIS_STREAM_PARTITIONS", "8"))
+STREAM_SHUFFLE_PARTITIONS = 8
 
 
 class _scoped_stream_partitions:

@@ -196,10 +196,8 @@ def s14b_chunks_batch_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk writer's bulk path (`chunking.py:134-157`)."""
     import json
 
-    import pandas as pd
-
     from loris_mri_spark.sources.pyds import (
-        decode_chunk_stream,
+        read_chunk_totals,
         register_chunks,
     )
 
@@ -228,34 +226,7 @@ def s14b_chunks_batch_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = _run_dir("s14b-chunks")
     chunks.write.format("loris_chunks").mode("overwrite").save(sink)
 
-    def decode_files(batches):
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                n = si = nf = 0
-                for rec in decode_chunk_stream(bytes(blob)):
-                    n += 1
-                    si += rec["index"]
-                    nf += len(rec["samples"])
-                rows.append((n, si, nf))
-            yield pd.DataFrame(
-                rows, columns=["n_chunks", "sum_index", "n_floats"]
-            )
-
-    landed = (
-        spark.read.format("binaryFile")
-        .load(os.path.join(sink, "*.pb"))
-        .select("content")
-        .mapInPandas(
-            decode_files, "n_chunks long, sum_index long, n_floats long"
-        )
-        .agg(
-            F.sum("n_chunks").alias("n_chunks"),
-            F.sum("sum_index").alias("sum_index"),
-            F.sum("n_floats").alias("n_floats"),
-        )
-        .first()
-    )
+    landed = read_chunk_totals(spark, os.path.join(sink, "*.pb"))
     with open(os.path.join(sink, "_SUCCESS")) as fh:
         manifest = json.load(fh)
     n_manifest = sum(f["n_records"] for f in manifest["files"])

@@ -8,6 +8,7 @@ import atexit
 import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
+from fractions import Fraction
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -626,7 +627,7 @@ def t13_stream_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reproduce the batch totals."""
     from loris_mri_spark.catalog import load_table
     from loris_mri_spark.sources.pyds import (
-        decode_chunk_stream,
+        read_chunk_totals,
         register_chunks,
     )
     from loris_mri_spark.streaming.incremental import (
@@ -670,35 +671,8 @@ def t13_stream_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Distributed read-back verification: decode the landed protobufs on
     # the EXECUTORS (binaryFile scan + per-file pure-python decode), not
     # in a driver loop — at 100 TB the audit pass is itself a job.
-    import pandas as pd  # noqa: F401
-
-    def decode_files(batches):
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                n = si = nf = 0
-                for rec in decode_chunk_stream(bytes(blob)):
-                    n += 1
-                    si += rec["index"]
-                    nf += len(rec["samples"])
-                rows.append((n, si, nf))
-            yield pd.DataFrame(
-                rows, columns=["n_chunks", "sum_index", "n_floats"]
-            )
-
-    landed = (
-        spark.read.format("binaryFile")
-        .load([os.path.join(sink, bd, "*.pb") for bd in bids])
-        .select("content")
-        .mapInPandas(
-            decode_files, "n_chunks long, sum_index long, n_floats long"
-        )
-        .agg(
-            F.sum("n_chunks").alias("n_chunks"),
-            F.sum("sum_index").alias("sum_index"),
-            F.sum("n_floats").alias("n_floats"),
-        )
-        .first()
+    landed = read_chunk_totals(
+        spark, [os.path.join(sink, bd, "*.pb") for bd in bids]
     )
     return spark.createDataFrame(
         [
@@ -956,6 +930,22 @@ def _t16_pool() -> ThreadPoolExecutor:
         return _T16_POOL
 
 
+# t16's pair threshold: the exact-verify filter keeps jaccard >= it, and
+# the size prefilter below is derived from the same value, so the two
+# cannot drift apart.
+T16_JACCARD = Fraction(4, 5)
+
+
+def _t16_size_ok(n_a, n_b):
+    """min/max >= T16_JACCARD, in exact integer form. jaccard(A,B) <=
+    min(|A|,|B|)/max(|A|,|B|), so this LOSSLESS prefilter drops only
+    pairs that could never reach the verify threshold."""
+    return (
+        F.least(n_a, n_b) * T16_JACCARD.denominator
+        >= F.greatest(n_a, n_b) * T16_JACCARD.numerator
+    )
+
+
 def _t16_detect_batch(
     bdf: DataFrame, bid: int, band_store: str, sh_store: str,
     pair_sink: str,
@@ -979,17 +969,15 @@ def _t16_detect_batch(
         .localCheckpoint()  # one shingle evaluation, three consumers
     )
     # band rows CARRY the shingle-set size so candidate pairs can be
-    # pruned BEFORE the array-verify joins ship full shingle arrays:
-    # jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|), so a pair can reach
-    # 0.8 only if 5*min >= 4*max (exact integer form of min/max >= 4/5)
-    # — a LOSSLESS prefilter that drops ~61% of banded candidates at
-    # sf0.1 (measured r13) off the two widest joins of the batch. The
-    # size rides the band STORE too, so batch-x-store candidates prune
-    # the same way against every earlier batch.
+    # pruned BEFORE the array-verify joins ship full shingle arrays
+    # (_t16_size_ok) — a LOSSLESS prefilter that drops ~61% of banded
+    # candidates at sf0.1 (measured r13) off the two widest joins of the
+    # batch. The size rides the band STORE too, so batch-x-store
+    # candidates prune the same way against every earlier batch.
     bands = minhash_band_table(
         docs, num_hashes=32, bands=16, extra_cols=("__n",)
     )
-    size_ok = F.least("x.__n", "__nj") * 5 >= F.greatest("x.__n", "__nj") * 4
+    size_ok = _t16_size_ok("x.__n", "__nj")
     cand = (
         bands.alias("x")
         .join(
@@ -1047,7 +1035,7 @@ def _t16_detect_batch(
             "j",
         )
         .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.8)
+        .filter(F.col("jaccard") >= float(T16_JACCARD))
         .select("i", "j", F.round("jaccard", 4).alias("jaccard_r"))
     )
     # three independent sinks off the same checkpointed batch (pairs =

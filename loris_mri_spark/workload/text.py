@@ -14,7 +14,6 @@ document profiling.
 
 from __future__ import annotations
 
-import os
 import re
 from functools import lru_cache
 
@@ -1338,22 +1337,6 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_VOCAB_K = 256
 
-# Web-scale type-table guard for the single-task merge phase: its memory
-# bound is "types x avg word length — one task at any corpus size", which
-# holds for curated corpora, but a noisy 100 TB web crawl can push
-# distinct regex types past executor memory (garbage strings are almost
-# all hapax). The standard production answer is a min-count prune of the
-# TRAINING type table — hapax/noise types carry negligible pair mass, so
-# excluding them leaves the learned merges essentially unchanged while
-# bounding the table by the corpus HEAD, whose size grows ~Heaps-
-# sublinearly (SCALE.md "bpe_min_count_prune" quantifies the bound on
-# this corpus). Train-only: the ENCODE side still covers every type,
-# exactly like production tokenizer trainers. Default 1 (no pruning) —
-# inert at test scales, where the replay goldens pin exact parity;
-# the threshold>1 path is parity-tested in tests/test_corpus.py. Both
-# the engine plan and the replay oracles read THIS constant.
-_BPE_MIN_COUNT = int(os.environ.get("LORIS_BPE_MIN_COUNT", "1"))
-
 
 def bpe_replay_segments(
     word_counts: "dict[str, int]", k: int
@@ -1397,9 +1380,7 @@ def _bpe_vocab_values_sql(sf_dir: str) -> "str | None":
     merges (every word becomes one symbol), so the golden also pins the
     early-stop semantics."""
     wc = _doc_word_counts(sf_dir)
-    rows = bpe_replay(
-        {w: c for w, c in wc.items() if c >= _BPE_MIN_COUNT}, _BPE_VOCAB_K
-    )
+    rows = bpe_replay(wc, _BPE_VOCAB_K)
     if not rows:
         return None
     return _bpe_values_sql(rows)
@@ -1425,11 +1406,9 @@ def text_bpe_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair counts INCREMENTALLY, so per-merge cost is O(words containing
     the merged pair), with zero Spark jobs inside the loop. 100-TB
     shape: corpus pass scales out; merge phase is corpus-size-
-    independent, with the min-count prune (_BPE_MIN_COUNT) bounding the
-    type table a noisy crawl ships to it. Oracle: golden replay over the
-    catalog under check at the same k and threshold — an INDEPENDENT from-scratch
-    recount implementation, so parity is a real check of the
-    incremental index maintenance."""
+    independent. Oracle: golden replay over the catalog under check at
+    the same k — an INDEPENDENT from-scratch recount implementation, so
+    parity is a real check of the incremental index maintenance."""
     from loris_mri_spark.operators.bpe import bpe_train_incremental
 
     d = load_table(spark, sf_dir, "documents")
@@ -1437,7 +1416,6 @@ def text_bpe_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(F.explode(tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("wc"))
-        .filter(F.col("wc") >= _BPE_MIN_COUNT)
     )
 
     def _train(pdf):
@@ -1463,39 +1441,6 @@ def text_bpe_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_APPLY_TOP = 30
 
 
-def _bpe_replay_segments_all(
-    wc: "dict[str, int]", k: int = _BPE_VOCAB_K
-) -> "dict[str, list]":
-    """Replay-side segmentation of EVERY type at merge count ``k``:
-    train on the min-count-pruned table (bpe_replay_segments final
-    state); types below the threshold are ENCODED, not trained — the
-    replay's learned rules applied in rank order (the replay's own
-    rule-application loop, independent of operators/bpe). Shared by the
-    apply-side and tokenize-corpus oracle builders."""
-    train_wc = {w: c for w, c in wc.items() if c >= _BPE_MIN_COUNT}
-    segs = bpe_replay_segments(train_wc, k)
-    if len(train_wc) < len(wc):
-        rules = [
-            (l, r) for _, l, r, _ in bpe_replay(train_wc, k)
-        ]
-        for w in wc:
-            if w in segs:
-                continue
-            s = list(w)
-            for left, right in rules:
-                ns, i = [], 0
-                while i < len(s):
-                    if i + 1 < len(s) and s[i] == left and s[i + 1] == right:
-                        ns.append(left + right)
-                        i += 2
-                    else:
-                        ns.append(s[i])
-                        i += 1
-                s = ns
-            segs[w] = s
-    return segs
-
-
 def _bpe_apply_values_sql(sf_dir: str) -> "str | None":
     """Golden VALUES oracle for the apply side, derived from the
     replay's FINAL TRAINING STATE (bpe_replay_segments) — a genuinely
@@ -1503,7 +1448,7 @@ def _bpe_apply_values_sql(sf_dir: str) -> "str | None":
     so parity checks the classic BPE invariant that applying learned
     merges in order reproduces the training segmentation."""
     wc = _doc_word_counts(sf_dir)
-    segs = _bpe_replay_segments_all(wc)
+    segs = bpe_replay_segments(wc, _BPE_VOCAB_K)
     freq: dict = {}
     for w, c in wc.items():
         for t in segs[w]:
@@ -1560,14 +1505,9 @@ def text_bpe_apply_subwords(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         wc = dict(zip(pdf["w"], pdf["wc"].astype(int)))
-        # Train on the min-count-pruned type table (the web-scale guard,
-        # see _BPE_MIN_COUNT); ENCODE every type — pruning is train-only.
         merges = [
             (l, r)
-            for _, l, r, _ in bpe_train_incremental(
-                {w: c for w, c in wc.items() if c >= _BPE_MIN_COUNT},
-                _BPE_VOCAB_K,
-            )
+            for _, l, r, _ in bpe_train_incremental(wc, _BPE_VOCAB_K)
         ]
         freq: dict = {}
         for w, c in wc.items():
@@ -1594,14 +1534,14 @@ def text_bpe_apply_subwords(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_tokenize_map_sql(sf_dir: str) -> "str | None":
     """Golden types->subword-count map for the distributed tokenize
     path, from the replay's final training state (the apply-side
-    recipe via _bpe_replay_segments_all); the corpus-side join and
+    recipe via bpe_replay_segments); the corpus-side join and
     aggregation stay LIVE SQL in the oracle, so DuckDB independently
     re-tokenizes every document against the golden map."""
     wc = _doc_word_counts(sf_dir)
     # k=8 (not the vocab query's 256): sf0.01's corpus EXHAUSTS at k=256
     # (every type one symbol, fertility uniformly 1.0) — partial merges
     # keep per-doc subword counts varied, a stronger value-hash check.
-    segs = _bpe_replay_segments_all(wc, _BPE_K)
+    segs = bpe_replay_segments(wc, _BPE_K)
     if not segs:
         return None
     vals = ", ".join(
@@ -1637,8 +1577,7 @@ def text_bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     The factorization (the industrial one): encoding is a function of
     the word TYPE, so
       1. one corpus pass builds the type table (map-side-combined
-         shuffle bounded by type count, min-count prune on the TRAIN
-         side only);
+         shuffle bounded by type count);
       2. the single-task trainer learns k=256 merges and encodes every
          type ONCE — output is a (type, n_subwords) table, vocab-sized;
       3. the encoded table joins back against the token-exploded corpus
@@ -1672,11 +1611,7 @@ def text_bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         wc = dict(zip(pdf["w"], pdf["wc"].astype(int)))
         merges = [
-            (l, r)
-            for _, l, r, _ in bpe_train_incremental(
-                {w: c for w, c in wc.items() if c >= _BPE_MIN_COUNT},
-                _BPE_K,
-            )
+            (l, r) for _, l, r, _ in bpe_train_incremental(wc, _BPE_K)
         ]
         return pd.DataFrame(
             [(w, len(bpe_encode(w, merges))) for w in wc],

@@ -4,6 +4,7 @@ otherwise go unnoticed until the next bench run."""
 
 from __future__ import annotations
 
+import ast
 import copy
 import py_compile
 import re
@@ -97,3 +98,55 @@ def test_merge_touches_only_the_sweeps_key():
     assert doc["eeg_bids_probe"] == before["eeg_bids_probe"]
     assert bench_scale.growth(sweeps["queries"], {"sf0.1": -1.0})[
         "growth_exponent"] is None
+
+
+# bench.py's final stdout line: the per-query warm map, its totals and
+# the two one-shot calibration timings.
+FINAL_LINE_KEYS = {
+    "metric", "value", "unit", "sf", "n_queries", "queries",
+    "cold_total_sec", "calib_python_loop_sec", "calib_jvm_agg_sec",
+}
+
+
+def _bench_tree():
+    return ast.parse((REPO / "bench.py").read_text())
+
+
+def test_bench_final_line_keeps_its_nine_keys():
+    """The `result` dict bench.py prints last, and the line its module
+    docstring documents, both carry exactly the nine keys."""
+    tree = _bench_tree()
+    (result,) = [
+        node.value for node in ast.walk(tree)
+        if isinstance(node, ast.Assign)
+        and [getattr(t, "id", None) for t in node.targets] == ["result"]
+    ]
+    assert {k.value for k in result.keys} == FINAL_LINE_KEYS
+    doc = ast.get_docstring(tree)
+    documented = doc[doc.index("{"):doc.index("}\n") + 1]
+    assert set(re.findall(r'"(\w+)":', documented)) == FINAL_LINE_KEYS
+
+
+def test_bench_never_reads_its_own_record():
+    """bench.py writes BENCH_DETAIL.json and never reads a record back:
+    runs are compared outside it."""
+    reads = [
+        ast.unparse(node.func) for node in ast.walk(_bench_tree())
+        if isinstance(node, ast.Call)
+        and (
+            (isinstance(node.func, ast.Attribute)
+             and node.func.attr in {"read_text", "read_bytes", "open",
+                                    "load", "loads", "exists"})
+            or (isinstance(node.func, ast.Name) and node.func.id == "open")
+        )
+    ]
+    # the only path probe is the warm-up's check for a catalog table
+    assert reads == ["os.path.exists"], reads
+
+
+def test_bench_detail_drops_the_comparator_fields():
+    src = (REPO / "bench.py").read_text()
+    for field in ("regressions_vs_prev", "flags", "calib_jvm_hot_sec",
+                  "host_speed_ratio_vs_prev", "midrun_recalib_jvm_sec",
+                  "adjudication"):
+        assert f'"{field}"' not in src, field

@@ -56,8 +56,8 @@ def test_file_parsers_emit_rows_through_map_rows():
     """How a Python parser's rows cross into Spark (batch loop, column
     order, missing keys, integer types) is decided once, in
     sources.files.map_rows: no sources/ module calls mapInPandas, and
-    the media operators and multimodal queries keep no batch loop of
-    their own."""
+    the media operators, multimodal queries, the ortho preview sink and
+    the chunk-sink read-back audits keep no batch loop of their own."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "loris_mri_spark"
@@ -67,7 +67,10 @@ def test_file_parsers_emit_rows_through_map_rows():
     ] + [
         str(p)
         for p in (pkg / "operators" / "media.py",
-                  pkg / "workload" / "multimodal.py")
+                  pkg / "workload" / "multimodal.py",
+                  pkg / "sinks.py",
+                  pkg / "workload" / "sinkops.py",
+                  pkg / "workload" / "streaming_ops.py")
         if "for pdf in batches" in p.read_text()
     ]
     assert offenders == [], offenders

@@ -284,11 +284,8 @@ def test_arrow_batch_chunk_encoding_is_byte_identical(tmp_path):
     null-list fallback (contract: null list == empty list)."""
     import pyarrow as pa
 
-    from loris_mri_spark.sinks import pb_encode_float_chunk
-    from loris_mri_spark.sources.pyds import (
-        _encode_chunk_record_batch,
-        _pb_varint_local,
-    )
+    from loris_mri_spark.sinks import _pb_varint, pb_encode_float_chunk
+    from loris_mri_spark.sources.pyds import _encode_chunk_record_batch
 
     rows = [
         (9, 4, 2, [3.25, -1.5]),
@@ -310,7 +307,7 @@ def test_arrow_batch_chunk_encoding_is_byte_identical(tmp_path):
     exp_msg_total = 0
     for i, d, c, s in rows:
         msg = pb_encode_float_chunk(i, d, c, s)
-        expected += _pb_varint_local(len(msg)) + msg
+        expected += _pb_varint(len(msg)) + msg
         exp_msg_total += len(msg)
     data, n, msg_total = _encode_chunk_record_batch(batch)
     assert data == bytes(expected)
@@ -328,7 +325,7 @@ def test_arrow_batch_chunk_encoding_is_byte_identical(tmp_path):
     expected2 = bytearray()
     for i, d, c, s in [(5, 1, 0, []), (6, 1, 0, [2.5])]:
         msg = pb_encode_float_chunk(i, d, c, s)
-        expected2 += _pb_varint_local(len(msg)) + msg
+        expected2 += _pb_varint(len(msg)) + msg
     data2, n2, _ = _encode_chunk_record_batch(batch_null)
     assert data2 == bytes(expected2) and n2 == 2
 

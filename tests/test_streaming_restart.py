@@ -133,6 +133,35 @@ def test_t16_size_prefilter_is_lossless(spark, sf_dir):
     assert got == want
 
 
+def test_t16_size_prefilter_matches_the_verify_threshold(spark):
+    """The size prefilter is derived from T16_JACCARD, the constant the
+    verify filter keeps: over set sizes 1..60 it passes exactly the
+    (na, nb) pairs with min/max >= T16_JACCARD."""
+    from fractions import Fraction
+
+    from pyspark.sql import functions as F
+
+    from loris_mri_spark.workload.streaming_ops import (
+        T16_JACCARD,
+        _t16_size_ok,
+    )
+
+    sizes = spark.range(1, 61).select(F.col("id").alias("na"))
+    grid = sizes.crossJoin(sizes.select(F.col("na").alias("nb")))
+    got = {
+        (r["na"], r["nb"])
+        for r in grid.filter(_t16_size_ok("na", "nb")).collect()
+    }
+    want = {
+        (a, b)
+        for a in range(1, 61)
+        for b in range(1, 61)
+        if Fraction(min(a, b), max(a, b)) >= T16_JACCARD
+    }
+    assert (4, 5) in want and (3, 4) not in want
+    assert got == want
+
+
 def test_t16_pool_created_once_and_shut_down_at_exit(monkeypatch):
     """The t16 sink pool is built on first use, reused after, and its
     shutdown is registered with atexit exactly once."""
